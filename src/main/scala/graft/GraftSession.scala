@@ -28,8 +28,7 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "2000")
   def local(cpus: String): SparkSession = {
     val b = builder(s"local[$cpus]", cpus)
-    // A/B instrumentation hook (the SPARK_GRAFT_AGG_FALLBACK pattern,
-    // generalized): SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" applies
+    // A/B instrumentation hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" applies
     // context-init confs (locality wait, AQE toggles, ...) without a
     // rebuild. Not used by any production path.
     // Every applied override is logged so a leaked env var can never
@@ -73,11 +72,7 @@ object GraftSession {
     */
   def withTrainerAggCapacity[T](spark: SparkSession)(f: => T): T = {
     val prev = spark.conf.getOption(FallbackKey)
-    // SPARK_GRAFT_AGG_FALLBACK overrides for A/B measurement (e.g. 128
-    // re-enables the Spark default sort-fallback behavior inside
-    // trainers without a rebuild).
-    spark.conf.set(FallbackKey,
-      sys.env.getOrElse("SPARK_GRAFT_AGG_FALLBACK", "4194304"))
+    spark.conf.set(FallbackKey, "4194304")
     try f finally prev match {
       case Some(v) => spark.conf.set(FallbackKey, v)
       case None    => spark.conf.unset(FallbackKey)

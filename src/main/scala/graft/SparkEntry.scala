@@ -1249,8 +1249,7 @@ object SparkEntry {
     // ranks of the dedicated q19 engine — same unrolled-SQL oracle.
     "q90_gas_pagerank" -> ((s, d) => {
       val e = Tables.customerSupplierEdges(s, d).select("src", "dst")
-      val verts = e.select(col("src").as("id"))
-        .union(e.select(col("dst"))).distinct()
+      val verts = PropertyGraph.fromEdges(e).vertices
       val od = e.groupBy("src").agg(count(lit(1)).as("odeg"))
       val ew = e.join(od, "src")
         .select(col("src"), col("dst"), (lit(1.0) / col("odeg")).as("w"))

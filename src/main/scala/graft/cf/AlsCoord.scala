@@ -46,9 +46,9 @@ object AlsCoord {
     var rmseFrames = Vector.empty[DataFrame]
     // r16: the coordinate update is computed INSIDE the solve aggregate
     // instead of joining the 1-column solve result back onto the factor
-    // table. The executed before-shape (GRAFT_DEBUG_CKPT dump,
-    // plans/r16/q54 notes) ran that update join as a SortMergeJoin with
-    // an exchange + sort on BOTH 1500-row sides, 16× per query — the
+    // table. The executed before-shape (OPTIMIZATION_r16.md batch 2) ran
+    // that update join as a SortMergeJoin with an exchange + sort on BOTH
+    // 1500-row sides, 16× per query — the
     // aggregate side's estimated stats defeat the broadcast choice and
     // q54's stage table showed 159 near-sequential ~73 ms stages. The
     // old factor vector is constant within each group (it arrived via

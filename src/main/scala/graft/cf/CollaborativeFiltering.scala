@@ -317,9 +317,9 @@ object CollaborativeFiltering {
     * dropped (`itemcf3.cpp:292`). Input: (src, dst, value).
     */
   def edgeWeightedJaccard(edges: DataFrame): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("value"))
-    val sym = e.union(
-      e.select(col("dst").as("src"), col("src").as("dst"), col("value")))
+    val sym = graft.graph.PropertyGraph
+      .fromEdges(edges.select(col("src"), col("dst"), col("value")))
+      .bothDirections.edges
     val strength = sym.groupBy("src").agg(sum("value").as("s"))
     sym.filter(col("src") > col("dst"))
       .join(strength.select(col("src"), col("s").as("s1")), "src")

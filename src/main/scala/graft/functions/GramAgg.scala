@@ -112,17 +112,18 @@ object GramAgg {
   /** Column API: accumulate [XᵗX | Xᵗy | n] over (design, rating, weight)
     * rows of a group into one flat array<double> of rank²+rank+1.
     *
-    * STAYS IMPERATIVE — r16 A/B'd the declarative mirror
-    * ([[GramAggDecl]], the same HashAggregate conversion that wins for
-    * VecSum/VecScaleSum) and it was a ~10× REGRESSION at rank 8
+    * STAYS IMPERATIVE — r16 A/B'd a declarative mirror (`GramAggDecl`,
+    * the same HashAggregate conversion that wins for VecSum/VecScaleSum)
+    * and it was a ~10× REGRESSION at rank 8
     * (q43_wals_normal 7.2→50 s, q51_pmf 10.5→71 s, q55_sparse_als
     * 5.7→69 s in the same subset roll where rank-8 VecScaleSumDecl
     * queries improved 1.3-1.8×): 73 buffer slots mean 64 gram update
     * expressions whose guards and GetArrayItem pairs blow the generated
     * update function past what C2/codegen-splitting handles for
     * per-row code, while the imperative kernel extracts the design
-    * vector once and runs a tight rank² loop. The declarative class
-    * stays (spec-pinned bit-equal) as measurement evidence.
+    * vector once and runs a tight rank² loop. The declarative class and
+    * its bit-equality spec were removed afterwards; both remain in git
+    * history (`git log -S GramAggDecl`).
     */
   def of(design: Column, rating: Column, weight: Column, rank: Int): Column =
     GraftShims.column(

@@ -23,27 +23,17 @@ object Algorithms {
     */
   def pageRank(edges: DataFrame, iterations: Int = 4,
                resetProb: Double = 0.15): DataFrame = {
-    val e = edges.select("src", "dst")
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("odeg"))
-    // Adjacency-grouped contributions — GraphChi's own storage shape
-    // (out-edge shards): one row per (src, chunk-of-dsts) with the
-    // 1/odeg weight. Joining RANK rows (|V|) instead of EDGE rows (|E|)
-    // and exploding inside the task cuts the per-superstep join ~|E|/|V|
-    // fold (measured 2-3× end-to-end on the 32M-edge probe). Chunking
-    // bounds the per-row payload at ~64k dsts so a power-law hub never
-    // materializes its whole out-list in one row.
-    val chunk = 65536
-    // r15: adjacency and vertex-set materializations are independent —
-    // overlap their jobs (Iterate.ckptAll; guide §2.6)
+    val g = PropertyGraph.fromEdges(edges.select("src", "dst"))
+    // Adjacency-grouped contributions: one row per (src, chunk-of-dsts)
+    // with the 1/odeg weight. Joining RANK rows (|V|) instead of EDGE
+    // rows (|E|) and exploding inside the task cuts the per-superstep
+    // join ~|E|/|V| fold (measured 2-3× end-to-end on the 32M-edge
+    // probe). The adjacency and vertex-set materializations are
+    // independent — overlap their jobs (Iterate.ckptAll).
     val pre = graft.graph.Iterate.ckptAll(
-      e.join(outDeg, "src")
-        .withColumn("b", pmod(col("dst"), (col("odeg") / chunk).cast("long") + 1))
-        .groupBy(col("src"), col("b"))
-        .agg(collect_list(col("dst")).as("ds"),
-          first(lit(1.0) / col("odeg")).as("w"))
-        .repartition(col("src")).sortWithinPartitions("src"),
-      e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct())
+      g.chunkedOutAdjacency(col("dst"))
+        .select(col("src"), col("nbrs"), (lit(1.0) / col("odeg")).as("w")),
+      g.vertices)
     val adj = pre(0)
     val verts = pre(1)
     // iterations = 0 ⇒ the uniform init (pr = 1.0), not an NPE on the
@@ -63,10 +53,10 @@ object Algorithms {
     var ranks: DataFrame = null // null ⇒ uniform pr = 1.0 (first round)
     for (i <- 1 to iterations) {
       val sent = if (ranks == null)
-        adj.select(explode(col("ds")).as("dst"), col("w").as("m"))
+        adj.select(explode(col("nbrs")).as("dst"), col("w").as("m"))
       else
         adj.join(ranks, adj("src") === ranks("id"), "left")
-          .select(explode(col("ds")).as("dst"),
+          .select(explode(col("nbrs")).as("dst"),
             (col("w") * coalesce(col("pr"), lit(resetProb))).as("m"))
       val inbox = sent.groupBy(col("dst").as("id"))
         .agg((lit(resetProb) + lit(1 - resetProb) * sum(col("m"))).as("pr"))
@@ -96,10 +86,7 @@ object Algorithms {
     */
   def connectedComponentsWithDeltaLog(edges: DataFrame,
                                       maxIter: Int = 50): (DataFrame, DataFrame) = {
-    // Undirected: symmetrize once.
-    val fwd = edges.select("src", "dst")
-    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
+    val sym = PropertyGraph.fromEdges(edges).symmetrize.edges
       .repartition(col("src"))
       .transform(graft.graph.Iterate.ckpt)
     var comp = sym.select(col("src").as("id")).distinct()
@@ -144,9 +131,8 @@ object Algorithms {
     * default.
     */
   def labelPropagation(edges: DataFrame, iterations: Int = 5): DataFrame = {
-    val fwd = edges.select("src", "dst")
-    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(col("src")).transform(graft.graph.Iterate.ckpt)
+    val sym = PropertyGraph.fromEdges(edges).symmetrize.edges
+      .repartition(col("src")).transform(graft.graph.Iterate.ckpt)
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")).transform(graft.graph.Iterate.ckpt)
     for (i <- 1 to iterations) {
@@ -170,13 +156,11 @@ object Algorithms {
     * vertices that survive in the k-core.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    val fwd = edges.select("src", "dst").filter(col("src") =!= col("dst"))
     // r16 (guide §2 job cadence): every peel's edge count — the
     // stability test — is harvested from the checkpoint materialization
     // instead of a separate count() action re-scanning the blocks.
     var (sym, prevEdges) = graft.graph.Iterate.ckptN(
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct())
+      PropertyGraph.fromEdges(edges).withoutSelfEdges.symmetrize.edges)
     var stable = false
     var iter = 0
     while (!stable && iter < maxIter) {
@@ -215,9 +199,8 @@ object Algorithms {
     */
   def coreness(edges: DataFrame, iterations: Int = 20): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val fwd = edges.select("src", "dst").filter(col("src") =!= col("dst"))
-    val sym = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(col("dst"))
+    val sym = PropertyGraph.fromEdges(edges).withoutSelfEdges.symmetrize.edges
+      .repartition(col("dst"))
       .transform(graft.graph.Iterate.ckpt)
     // r16 (guide §2 job cadence): the initial label sum rides the same
     // checkpoint job; each round's convergence test compares label sums
@@ -260,8 +243,8 @@ object Algorithms {
       // when f started at degree, and H is monotone — the same property
       // the early-stop equivalence argument above already relies on),
       // so "no label moved" ⟺ "Σc is unchanged" — exact long arithmetic,
-      // no increase can mask a decrease. The sum rides the checkpoint
-      // via Dataset.observe: one job per round, no prev-join, and the
+      // no increase can mask a decrease. The sum rides the checkpoint's
+      // materializing pass: one job per round, no prev-join, and the
       // materialized rows shrink to (id, c).
       val (staged, newSum) = graft.graph.Iterate.ckptSum(
         hist.withColumn("cum", sum("m").over(w))
@@ -276,36 +259,24 @@ object Algorithms {
     lab
   }
 
-  /** Triangle count per vertex and the degree-ordering pre-pass — the
-    * reference's `example_apps/trianglecounting.cpp:282-427` with
-    * `order_by_degree` relabeling
-    * (`src/preprocessing/util/orderbydegree.hpp:59`). The classic
-    * Spark-first formulation: canonicalize each undirected edge so it
-    * points from the lower-degree endpoint to the higher ("degree
-    * ordering" — bounds the self-join the same way the reference's
-    * relabeling bounds pivot memory), then count wedge closures with one
-    * self-join + one semi-join against the edge set.
-    */
-  /** Shared triangle pre-pass: canonicalize/dedup the undirected edge
-    * set, degree-order relabel, and enumerate closed wedges. Returns
-    * (closed wedges `(u, x, y)` — one row per triangle — and the
+  /** Shared triangle prep: degree-ordered orientation + per-edge sorted
+    * out-adjacency pair — the reference's order_by_degree pre-pass
+    * (`src/preprocessing/util/orderbydegree.hpp:59`) + pivot-scan layout
+    * (`examples/trianglecounting.cpp:134-161`), not the wedge self-join:
+    * a wedge join materializes Σ_u d_out(u)² rows through a shuffle
+    * (≈8·|E| even on a 16-regular graph, quadratic on hubs), while the
+    * adjacency form moves each edge once per side (2 shuffles of 8-byte
+    * pairs) and intersects sorted arrays inside codegen
+    * ([[graft.functions.SortedIntersect]], O(d_u + d_v) per edge).
+    * Degree-ordered orientation bounds out-degree by ~2·√|E| (standard
+    * orientation bound), so the collected neighbor arrays stay KBs even
+    * on hub-skewed graphs — the property that makes `collect_list` safe
+    * here when it is banned elsewhere. Returns (edge rows `(u, v, nu,
+    * nv)` with both endpoints' sorted out-neighbor arrays, and the
     * newid→id mapping for callers that need original ids).
     */
-  /** Shared triangle prep: degree-ordered orientation + per-edge sorted
-    * out-adjacency pair — the reference's order_by_degree pre-pass +
-    * pivot-scan layout (`examples/trianglecounting.cpp:134-161`), not
-    * the wedge self-join: a wedge join materializes Σ_u d_out(u)² rows
-    * through a shuffle (≈8·|E| even on a 16-regular graph, quadratic on
-    * hubs), while the adjacency form moves each edge once per side
-    * (2 shuffles of 8-byte pairs) and intersects sorted arrays inside
-    * codegen ([[graft.functions.SortedIntersect]], O(d_u + d_v) per
-    * edge). Degree-ordered orientation bounds out-degree by ~2·√|E|
-    * (standard orientation bound), so the collected neighbor arrays
-    * stay KBs even on hub-skewed graphs — the property that makes
-    * `collect_list` safe here when it is banned elsewhere.
-    */
   private def triangleEdgeAdj(edges: DataFrame): (DataFrame, DataFrame) = {
-    val und = edges.select("src", "dst").filter(col("src") =!= col("dst"))
+    val und = PropertyGraph.fromEdges(edges).withoutSelfEdges.edges
       .select(least(col("src"), col("dst")).as("src"),
               greatest(col("src"), col("dst")).as("dst"))
       .distinct()
@@ -331,6 +302,12 @@ object Algorithms {
     (withAdj, mapping)
   }
 
+  /** Triangle count per vertex — the reference's
+    * `example_apps/trianglecounting.cpp:282-427`: every undirected
+    * triangle adds one to each of its three corners. Self-loops and
+    * duplicate edges are ignored; returns `(id, triangles)` for the
+    * vertices on at least one triangle.
+    */
   def triangleCounts(edges: DataFrame): DataFrame = {
     val (withAdj, mapping) = triangleEdgeAdj(edges)
     // Edge (u,v) closes one triangle per common out-neighbor w: u and v
@@ -424,8 +401,7 @@ object Algorithms {
         (if (edges.columns.contains("weight")) col("weight").cast("double")
          else lit(1.0)).as("w"))
       .repartition(col("src")).transform(graft.graph.Iterate.ckpt)
-    val verts = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .distinct()
+    val verts = PropertyGraph.fromEdges(e).vertices
     val oneHot = (l: Column) => transform(sequence(lit(0), lit(numLabels - 1)),
       i => when(i === l, 1.0d).otherwise(0.0d))
     val uniform = array_repeat(lit(1.0d / numLabels), numLabels)

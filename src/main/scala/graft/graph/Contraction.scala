@@ -21,7 +21,7 @@ object Contraction {
     */
   def stronglyConnectedComponents(edges: DataFrame, maxPhases: Int = 10000): DataFrame = {
     val spark = edges.sparkSession
-    var e = edges.select("src", "dst").filter(col("src") =!= col("dst"))
+    var e = PropertyGraph.fromEdges(edges.select("src", "dst")).withoutSelfEdges.edges
       .distinct().transform(graft.graph.Iterate.ckpt)
     // r16 (guide §2 job cadence): every convergence/progress count in
     // the phase machinery is harvested from its frame's checkpoint
@@ -29,9 +29,8 @@ object Contraction {
     // count()/isEmpty action — the `live` tally below is maintained
     // from those counts, so no standalone job re-scans `remaining`
     // between phases.
-    var (remaining, live) = graft.graph.Iterate.ckptN(
-      e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct())
+    var (remaining, live) =
+      graft.graph.Iterate.ckptN(PropertyGraph.fromEdges(e).vertices)
     // r16: assigned SCCs accumulate as LAZY projections over frames the
     // loop already materializes (each `single` and `reached` is
     // checkpointed), with one union at the end — the previous shape
@@ -159,14 +158,13 @@ object Contraction {
     val spark = edges.sparkSession
     import spark.implicits._
     // undirected canonical edges
-    var e = edges.select(
+    var e = PropertyGraph.fromEdges(edges).withoutSelfEdges.edges.select(
         least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"), col("weight"))
-      .filter(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(min("weight").as("weight"))
       .transform(graft.graph.Iterate.ckpt)
-    var comp = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .distinct().withColumn("comp", col("id")).transform(graft.graph.Iterate.ckpt)
+    var comp = PropertyGraph.fromEdges(e).vertices
+      .withColumn("comp", col("id")).transform(graft.graph.Iterate.ckpt)
     // r16 (guide §1.2 / VERDICT #5 job cadence): the forest is no longer
     // union+checkpointed per round — each round's minEdge frame is
     // already materialized, so we keep lazy projections over those

@@ -33,10 +33,7 @@ object Functional {
     */
   def bulkSync(edges: DataFrame, kernel: FunctionalKernel,
                iterations: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val verts = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-    Pregel.run(verts, edges,
+    Pregel.run(PropertyGraph.fromEdges(edges).vertices, edges,
       initial = Map("value" -> kernel.initialValue),
       sendMsg = kernel.valueToNeighbor,
       aggMsg = kernel.plus,

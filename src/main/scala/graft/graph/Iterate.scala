@@ -13,19 +13,6 @@ import org.apache.spark.sql.{DataFrame, GraftShims}
 object Iterate {
   def ckpt(df: DataFrame): DataFrame = GraftShims.freshCheckpoint(df)
 
-  /** Materialize several INDEPENDENT frames concurrently (r15, guide
-    * §2.6 "overlap independent jobs"): each `ckpt` is an eager blocking
-    * action whose job under-fills the cluster at the tail, so a
-    * superstep that updates two or more independent state tables (user
-    * and item factors, say) wastes most cores while the second
-    * materialization waits for the first. Submitting them from a small
-    * thread pool lets the later jobs' tasks back-fill executors freed
-    * by the earlier jobs' stragglers — identical results (the jobs do
-    * not depend on each other), less wall-clock. Spark's scheduler
-    * supports concurrent job submission natively; FIFO scheduling gives
-    * exactly the back-fill behavior. Callers MUST pass frames with no
-    * data dependency on one another.
-    */
   /** Checkpoint `df` and return its row count, harvested from the
     * materializing `count()` action itself (r16, guide §2 job cadence) —
     * superstep loops need a convergence/progress count every round, and
@@ -56,6 +43,19 @@ object Iterate {
     (out, s)
   }
 
+  /** Materialize several INDEPENDENT frames concurrently (r15, guide
+    * §2.6 "overlap independent jobs"): each `ckpt` is an eager blocking
+    * action whose job under-fills the cluster at the tail, so a
+    * superstep that updates two or more independent state tables (user
+    * and item factors, say) wastes most cores while the second
+    * materialization waits for the first. Submitting them from a small
+    * thread pool lets the later jobs' tasks back-fill executors freed
+    * by the earlier jobs' stragglers — identical results (the jobs do
+    * not depend on each other), less wall-clock. Spark's scheduler
+    * supports concurrent job submission natively; FIFO scheduling gives
+    * exactly the back-fill behavior. Callers MUST pass frames with no
+    * data dependency on one another.
+    */
   def ckptAll(dfs: DataFrame*): Seq[DataFrame] = {
     if (dfs.size <= 1) return dfs.map(ckpt)
     import scala.concurrent.{Await, ExecutionContext, Future}

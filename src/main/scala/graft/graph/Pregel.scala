@@ -25,7 +25,8 @@ import org.apache.spark.sql.functions._
   *   messages  = adj ⋈ vertices ON src → explode(chunk) → msgExpr
   *   inbox     = messages.groupBy(dst).agg(aggExpr)      (one shuffle)
   *   vertices' = vertices LEFT JOIN inbox  →  update columns
-  * Chunking bounds a power-law hub's row payload (≤16k edges per row).
+  * Chunking splits a power-law hub's out-list over several rows
+  * (about [[PropertyGraph.AdjacencyChunk]] edges each).
   * The adjacency and vertex sides stay hash-partitioned on the join key
   * across supersteps (the checkpoint preserves partitioning), so one
   * superstep runs a single exchange — the inbox aggregation.
@@ -71,19 +72,13 @@ object Pregel {
       (col("id") +: stateCols.map(c => initial(c).as(c))): _*)
     v = v.transform(graft.graph.Iterate.ckpt)
 
-    // Chunked out-adjacency, built once: one row per (src, ≤16k-edge
-    // chunk) carrying every non-src edge column as a struct list. The
-    // per-superstep join touches ~|V| rows instead of |E| and the chunk
-    // explodes inside the task, after the join.
-    val chunk = 16384
+    // Chunked out-adjacency, built once, carrying every non-src edge
+    // column as a struct list; the chunk explodes inside the task, after
+    // the per-superstep join.
     val edgeAttrs = edges.columns.filterNot(_ == "src").toSeq
-    val odeg = edges.groupBy("src").agg(count(lit(1)).as("__odeg"))
-    val adj = edges.join(odeg, "src")
-      .withColumn("__b", pmod(col("dst"),
-        (col("__odeg") / chunk).cast("long") + 1))
-      .groupBy(col("src"), col("__b"))
-      .agg(collect_list(struct(edgeAttrs.map(col): _*)).as("__es"))
-      .repartition(col("src")).sortWithinPartitions("src")
+    val adj = PropertyGraph(vertices, edges)
+      .chunkedOutAdjacency(struct(edgeAttrs.map(col): _*))
+      .select("src", "nbrs")
       .transform(graft.graph.Iterate.ckpt)
 
     var frontier: DataFrame = null  // null = all vertices active
@@ -97,14 +92,18 @@ object Pregel {
       else srcState
       val srcCols = Seq(col("src")) ++ stateCols.map(c => col(s"src_$c"))
       val msgs = adj.join(srcV, adj("src") === col("__src_id"))
-        .select(srcCols :+ explode(col("__es")).as("__e"): _*)
+        .select(srcCols :+ explode(col("nbrs")).as("__e"): _*)
         .select(srcCols ++ edgeAttrs.map(a => col(s"__e.$a").as(a)): _*)
         .select(col("dst").as("__dst"), sendMsg.as("msg"))
         .filter(col("msg").isNotNull)
-      val inbox = msgs.groupBy(col("__dst")).agg(aggMsg.as("msg"))
-        .transform(if (activeOnly) graft.graph.Iterate.ckpt else identity[DataFrame])
+      val agg = msgs.groupBy(col("__dst")).agg(aggMsg.as("msg"))
+      // activeOnly: the inbox is the next frontier, so it is materialized
+      // anyway; its row count — the termination test — comes from that
+      // same job rather than a separate isEmpty job per superstep.
+      val (inbox, received) =
+        if (activeOnly) graft.graph.Iterate.ckptN(agg) else (agg, -1L)
 
-      if (activeOnly && inbox.isEmpty) {
+      if (received == 0L) {
         done = true
       } else {
         val joined = v.join(inbox, v("id") === col("__dst"), "left")

@@ -107,15 +107,59 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   def percolate(p: Double, seed: Long = 42L): PropertyGraph =
     copy(edges = edges.filter(rand(seed) < p))
 
-  /** Undirected view: each edge plus its reverse, deduplicated. */
+  /** Each edge plus its reverse, property columns carried along and
+    * nothing deduplicated (a duplicate edge or a self-loop appears
+    * twice): the multigraph view weighted undirected programs sum over.
+    */
+  def bothDirections: PropertyGraph = {
+    val rev = edges.select(edges.columns.toSeq.map {
+      case "src" => col("dst").as("src")
+      case "dst" => col("src").as("dst")
+      case c => col(c)
+    }: _*)
+    copy(edges = edges.union(rev))
+  }
+
+  /** Undirected view: each edge plus its reverse, deduplicated, property
+    * columns dropped. Self-loops stay (one `(v, v)` row); callers that
+    * drop them call [[withoutSelfEdges]] first.
+    */
   def symmetrize: PropertyGraph = {
-    val fwd = edges.select("src", "dst")
-    val rev = edges.select(col("dst").as("src"), col("src").as("dst"))
-    copy(edges = fwd.union(rev).distinct())
+    val both = copy(edges = edges.select("src", "dst")).bothDirections
+    copy(edges = both.edges.distinct())
+  }
+
+  /** Chunked out-adjacency — GraphChi's out-edge shard shape
+    * (`src/engine/auxdata/`): each source's out-edges split by `dst`
+    * residue into `odeg / AdjacencyChunk + 1` chunks, one row per
+    * (src, chunk) with `nbrs = collect_list(item)` over the chunk's edges
+    * and the source's full out-degree `odeg`, hash-partitioned and sorted
+    * on `src`. A superstep joins these ~|V| rows to the source state and
+    * explodes `nbrs` inside the task instead of joining |E| edge rows;
+    * the chunking keeps a power-law hub's out-list out of one row.
+    * `item` is evaluated over the edge row.
+    */
+  def chunkedOutAdjacency(item: Column): DataFrame = {
+    val odeg = edges.groupBy("src").agg(count(lit(1)).as("__odeg"))
+    edges.join(odeg, "src")
+      .groupBy(col("src"),
+        pmod(col("dst"), (col("__odeg") / AdjacencyChunk).cast("long") + 1).as("__chunk"))
+      .agg(collect_list(item).as("nbrs"), first(col("__odeg")).as("odeg"))
+      .repartition(col("src")).sortWithinPartitions("src")
+      .select("src", "nbrs", "odeg")
   }
 }
 
 object PropertyGraph {
+  /** Chunk size of [[chunkedOutAdjacency]]: a source's chunks average at
+    * most this many out-edges. 16384 keeps the widest payload — Pregel's
+    * edge-attribute structs, ~32 bytes per (dst, weight) edge against
+    * PageRank's bare 8-byte ids — near half a MB per row; a hub pays one
+    * extra adjacency row per 16384 out-edges, noise next to the ~|V|
+    * rows a superstep joins.
+    */
+  val AdjacencyChunk = 16384
+
   /** Build from an edge DataFrame alone; vertices = endpoint union (how
     * the reference infers the vertex set from shards, `sharder.hpp:908-926`).
     */

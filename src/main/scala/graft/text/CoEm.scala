@@ -60,8 +60,7 @@ object CoEm {
       .select(col("nid").as("src"), col("cid").as("dst"),
         col("cnt").cast("double").as("weight"))
     Graph(nounDict, contextDict,
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst"),
-        col("weight"))))
+      graft.graph.PropertyGraph.fromEdges(fwd).bothDirections.edges)
   }
 
   /** End-to-end CoEM: extract pairs, build the bipartite graph, pin the

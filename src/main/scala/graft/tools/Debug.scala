@@ -270,69 +270,11 @@ object Debug {
             .values.foreach(_.unpersist(blocking = true))
           spark.catalog.clearCache(); System.gc()
           val t0 = System.nanoTime()
-          // inline replica of triangleEdgeAdj for the sub-piece variants
-          def pieces(): (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-            val und = edges.select(least(col("src"), col("dst")).as("src"),
-                greatest(col("src"), col("dst")).as("dst")).distinct()
-              .transform(graft.graph.Iterate.ckpt)
-            val (relabeled, mapping) = graft.graph.Generators.orderByDegree(und)
-            val oriented = relabeled.select(
-                least(col("src"), col("dst")).as("u"),
-                greatest(col("src"), col("dst")).as("v"))
-              .transform(graft.graph.Iterate.ckpt)
-            val adj = oriented.groupBy(col("u").as("w"))
-              .agg(sort_array(collect_list(col("v"))).as("nbrs"))
-              .transform(graft.graph.Iterate.ckpt)
-            val withAdj = oriented
-              .join(adj.select(col("w").as("u"), col("nbrs").as("nu")), "u")
-              .join(adj.select(col("w").as("v"), col("nbrs").as("nv")),
-                Seq("v"), "left")
-              .select(col("u"), col("v"), col("nu"),
-                coalesce(col("nv"), array().cast("array<bigint>")).as("nv"))
-            (withAdj, mapping)
-          }
           val out = piece match {
             case "adj" => graft.graph.Algorithms.totalTriangles(edges)
             case "counts" => graft.graph.Algorithms.triangleCounts(edges)
               .agg(coalesce(org.apache.spark.sql.functions.sum("triangles"),
                 lit(0L))).first().getLong(0)
-            case "corners" => // corner explode + groupBy, NO mapping join
-              val (withAdj, _) = pieces()
-              val inter = withAdj.select(col("u"), col("v"),
-                graft.functions.SortedIntersect.of(col("nu"), col("nv")).as("ws"))
-              val c = size(col("ws")).cast("long")
-              inter.select(explode(concat(
-                  array(struct(col("u").as("newid"), c.as("c")),
-                        struct(col("v").as("newid"), c.as("c"))),
-                  transform(col("ws"), w => struct(w.as("newid"), lit(1L).as("c")))))
-                  .as("p"))
-                .select(col("p.newid").as("newid"), col("p.c").as("c"))
-                .groupBy("newid")
-                .agg(org.apache.spark.sql.functions.sum("c").as("t"))
-                .agg(coalesce(org.apache.spark.sql.functions.sum("t"), lit(0L)))
-                .first().getLong(0)
-            case "corners2" => // long-array posexplode variant (no structs)
-              val (withAdj, _) = pieces()
-              val inter = withAdj.select(col("u"), col("v"),
-                graft.functions.SortedIntersect.of(col("nu"), col("nv")).as("ws"))
-              val c = size(col("ws")).cast("long")
-              inter.select(c.as("c"),
-                  posexplode(concat(array(col("u"), col("v")), col("ws"))))
-                .select(col("col").as("newid"),
-                  when(col("pos") < 2, col("c")).otherwise(lit(1L)).as("w"))
-                .groupBy("newid")
-                .agg(org.apache.spark.sql.functions.sum("w").as("t"))
-                .agg(coalesce(org.apache.spark.sql.functions.sum("t"), lit(0L)))
-                .first().getLong(0)
-            case "mapjoin" => // intersect counts joined to mapping, no explode
-              val (withAdj, mapping) = pieces()
-              val perU = withAdj.select(col("u").as("newid"),
-                graft.functions.SortedIntersect.countOf(col("nu"), col("nv")).as("c"))
-                .groupBy("newid")
-                .agg(org.apache.spark.sql.functions.sum("c").as("t"))
-              perU.join(mapping, "newid")
-                .agg(coalesce(org.apache.spark.sql.functions.sum("t"), lit(0L)))
-                .first().getLong(0)
             case other => sys.error(s"unknown piece: $other")
           }
           println(f"TRI $piece RUN $i ${(System.nanoTime() - t0) / 1e9}%.2f s out=$out")

@@ -60,18 +60,14 @@ object GraftShims {
     * per superstep, and serialized blocks pay a per-row deserialization
     * on every read (q135 per-query cpu 13.5→50.9 s, q44 42.7→96.4 s in
     * the A/B roll; Java-serde of rank/dim-length array rows dwarfs the
-    * estimation walk it saved). SPARK_GRAFT_CKPT_LEVEL keeps the knob
-    * for measurement; values are storage-level-independent either way.
+    * estimation walk it saved). Values are storage-level-independent.
     */
-  private lazy val ckptLevel: org.apache.spark.storage.StorageLevel =
-    org.apache.spark.storage.StorageLevel.fromString(
-      sys.env.getOrElse("SPARK_GRAFT_CKPT_LEVEL", "MEMORY_AND_DISK"))
+  private val ckptLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   def freshCheckpoint(df: DataFrame): DataFrame = {
     val cdf = df.asInstanceOf[CDataset[Row]]
     val spark = cdf.sparkSession.asInstanceOf[CSparkSession]
     val ck = cdf.localCheckpoint(true, ckptLevel).asInstanceOf[CDataset[Row]]
-    debugWalk(cdf)
     // localCheckpoint's own LogicalRDD carries the materialized plan's
     // output partitioning/ordering (attribute-rewritten). Keep those —
     // they let EnsureRequirements elide one exchange per superstep when
@@ -135,53 +131,10 @@ object GraftShims {
         mapped.localCheckpoint()
         (mapped, mapped.count())
       }
-    debugWalk(cdf)
     val lr = LogicalRDD.fromDataset(rdd, cdf, cdf.isStreaming)
     val out = CDataset.ofRows(spark,
       LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
         lr.outputOrdering, lr.isStreaming)(spark))
     (out, n, acc.map(_.value.longValue).getOrElse(0L))
-  }
-
-  /** Debug hook (GRAFT_DEBUG_CKPT): the iterative drivers' heavy
-    * aggregates execute INSIDE the materializing checkpoint action, so
-    * their executed-plan metrics are invisible to any walk of the
-    * caller's final frame — print them here, where the executed AQE
-    * plan (and its populated SQLMetrics, e.g. ObjectHashAggregate's
-    * numTasksFallBacked) is still in hand. Diagnostic only.
-    */
-  private def debugWalk(cdf: CDataset[Row]): Unit = {
-    if (graft.tools.Proc.envFlag("GRAFT_DEBUG_CKPT")) {
-      import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-      def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
-        p match {
-          case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-          case q: QueryStageExec => walk(q.plan)
-          case agg: BaseAggregateExec =>
-            val ms = agg.metrics.map { case (k, m) => s"$k=${m.value}" }
-              .toSeq.sorted.mkString(" ")
-            System.err.println(s"[ckpt-agg] ${agg.getClass.getSimpleName} " +
-              s"groups=${agg.groupingExpressions.map(_.name).mkString(",")} $ms")
-          // r16: joins/exchanges/sorts too — the trainer supersteps'
-          // executed join strategy and shuffle count are otherwise
-          // invisible (their plans execute inside the ckpt action)
-          case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
-            val rows = j.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)
-            System.err.println(s"[ckpt-join] ${j.getClass.getSimpleName} " +
-              s"keys=${j.leftKeys.map(_.sql).mkString(",")} rows=$rows")
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-            System.err.println(s"[ckpt-exchange] ${e.outputPartitioning}")
-          case so: org.apache.spark.sql.execution.SortExec =>
-            System.err.println(s"[ckpt-sort] ${so.sortOrder.map(_.sql).mkString(",")}")
-          case _ => ()
-        }
-        p.children.foreach(walk)
-        p.subqueries.foreach(walk)
-      }
-      // the INPUT frame's physical plan is what the checkpoint action
-      // executed (the result frame is just a scan of the materialized RDD)
-      walk(cdf.queryExecution.executedPlan)
-    }
   }
 }

@@ -156,4 +156,67 @@ class AlgorithmsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(kept == Set((1L, 2L)))
   }
+
+  // Shape specs for the shared graph preparation in PropertyGraph.
+
+  test("pageRank: hub with chunk-1, chunk and chunk+1 out-edges matches the closed form and Pregel") {
+    // bidirectional star: hub 0 <-> leaves 1..n, so the hub's out-list
+    // straddles the adjacency chunk boundary. From pr = 1 everywhere,
+    // leaf' = 0.15 + 0.85·hub/n and hub' = 0.15 + 0.85·n·leaf.
+    val iters = 3
+    for (n <- Seq(PropertyGraph.AdjacencyChunk - 1, PropertyGraph.AdjacencyChunk,
+                  PropertyGraph.AdjacencyChunk + 1)) {
+      val e = spark.range(1, n + 1L)
+        .selectExpr("explode(array(named_struct('src', 0L, 'dst', id), " +
+          "named_struct('src', id, 'dst', 0L))) AS e")
+        .select("e.src", "e.dst")
+      var hub = 1.0
+      var leaf = 1.0
+      for (_ <- 1 to iters) {
+        val h = 0.15 + 0.85 * n * leaf
+        leaf = 0.15 + 0.85 * hub / n
+        hub = h
+      }
+      val pr = Algorithms.pageRank(e, iterations = iters)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(pr.size == n + 1, s"n=$n")
+      assert(math.abs(pr(0L) - hub) <= 1e-9 * hub, s"n=$n hub ${pr(0L)} != $hub")
+      assert(pr.removed(0L).values.forall(v => math.abs(v - leaf) <= 1e-12),
+        s"n=$n leaf != $leaf")
+      val ew = e.withColumn("w", when(col("src") === 0L, lit(1.0 / n)).otherwise(lit(1.0)))
+      val fn = Functional.bulkSync(ew, FunctionalKernel(
+          initialValue = lit(1.0),
+          valueToNeighbor = col("src_value") * col("w"),
+          plus = sum(col("msg")),
+          compute = lit(0.15) + lit(0.85) * coalesce(col("msg"), lit(0.0))),
+        iterations = iters)
+        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(fn.keySet == pr.keySet, s"n=$n")
+      for ((v, x) <- pr)
+        assert(math.abs(fn(v) - x) <= 1e-9 * x, s"n=$n vertex $v: Pregel ${fn(v)} vs $x")
+    }
+  }
+
+  test("empty edge set: pageRank, connectedComponents, kCore and coreness return nothing") {
+    val e = Seq.empty[(Long, Long)].toDF("src", "dst")
+    assert(Algorithms.pageRank(e, iterations = 3).collect().isEmpty)
+    val (cc, log) = Algorithms.connectedComponentsWithDeltaLog(e)
+    assert(cc.collect().isEmpty)
+    assert(log.collect().isEmpty)
+    assert(log.columns.toSeq == Seq("iter", "nupdates"))
+    assert(Algorithms.kCore(e, 1).collect().isEmpty)
+    assert(Algorithms.coreness(e).collect().isEmpty)
+  }
+
+  test("self-loops only: CC and labelPropagation keep the vertex, kCore and coreness drop it") {
+    val e = edges(5L -> 5L, 7L -> 7L, 7L -> 7L)
+    val cc = Algorithms.connectedComponents(e)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(cc == Map(5L -> 5L, 7L -> 7L))
+    val lp = Algorithms.labelPropagation(e, iterations = 3)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lp == Map(5L -> 5L, 7L -> 7L))
+    assert(Algorithms.kCore(e, 1).collect().isEmpty)
+    assert(Algorithms.coreness(e).collect().isEmpty)
+  }
 }

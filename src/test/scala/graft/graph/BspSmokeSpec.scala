@@ -52,4 +52,21 @@ class BspSmokeSpec extends SparkSpec {
     val seen = result.collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(seen == Map(1L -> true, 2L -> true, 3L -> true))
   }
+
+  test("active-set termination: no edges means no messages and one superstep") {
+    // the inbox row count that ends an activeOnly run comes from the
+    // inbox checkpoint; with nothing to send the state must stay at its
+    // initial value
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val vertices = Seq(1L, 2L).toDF("id")
+    val result = Pregel.run(
+      vertices, edges,
+      initial = Map("x" -> col("id") * 10L),
+      sendMsg = col("src_x"),
+      aggMsg = sum(col("msg")),
+      update = Map("x" -> (col("x") + col("msg"))),
+      maxIter = 100, activeOnly = true)
+    val got = result.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 10L, 2L -> 20L))
+  }
 }
