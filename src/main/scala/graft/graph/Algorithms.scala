@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Graph algorithm library — the reference's `example_apps/` and
@@ -70,58 +70,39 @@ object Algorithms {
   }
 
   /** Connected components by min-label flooding to a fixpoint — the
-    * reference's `example_apps/connectedcomponents.cpp:79-138`. Uses the
-    * active-set formulation (only changed vertices send) and converges
-    * when no label changes, mirroring the reference's scheduler-driven
-    * termination (`graphchi_engine.hpp:802-810`).
+    * reference's `example_apps/connectedcomponents.cpp:79-138`: a
+    * [[Pregel]] `activeOnly` run, so only vertices whose label changed
+    * send, and it converges when no label changes, mirroring the
+    * reference's scheduler-driven termination
+    * (`graphchi_engine.hpp:802-810`).
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsWithDeltaLog(edges, maxIter)._1
 
   /** Connected components plus the reference's per-iteration delta log
     * (`src/engine/graphchi_engine.hpp:593-599`: iter, nupdates, work) —
-    * here (iter, nupdates) with nupdates = labels changed that round.
-    * The log is collected driver-side (one tiny row per superstep, same
-    * as the reference's CSV).
+    * here (iter, nupdates) with nupdates = labels changed that round,
+    * one row per superstep that changed a label. The counts are the
+    * runner's per-superstep changed counts (one tiny row per superstep
+    * on the driver, same as the reference's CSV).
     */
   def connectedComponentsWithDeltaLog(edges: DataFrame,
                                       maxIter: Int = 50): (DataFrame, DataFrame) = {
+    // materialized once: the vertex set and the runner's adjacency are
+    // both built from it without re-reading `edges`
     val sym = PropertyGraph.fromEdges(edges).symmetrize.edges
-      .repartition(col("src"))
       .transform(graft.graph.Iterate.ckpt)
-    var comp = sym.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .transform(graft.graph.Iterate.ckpt)
-    var active = comp // vertices whose label changed last round
-    var iter = 0
-    var converged = false
-    val log = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-    while (iter < maxIter && !converged) {
-      // Messages flow only out of vertices that changed (selective scheduling).
-      val msgs = sym.join(active, sym("src") === active("id"))
-        .groupBy(col("dst").as("mid")).agg(min("component").as("mcomp"))
-      // r16 (guide §2 job cadence): nupdates — needed both for the
-      // delta log and for convergence — is harvested from the checkpoint
-      // materialization itself instead of a separate count() re-scanning
-      // the just-materialized blocks: one driver-blocking job per
-      // superstep.
-      val (joined, nupdates) = graft.graph.Iterate.ckptN(
-        comp.join(msgs, comp("id") === col("mid"), "inner")
-          .filter(col("mcomp") < col("component"))
-          .select(col("id").as("cid"), col("mcomp")))
-      if (nupdates == 0) converged = true
-      else {
-        comp = comp.join(joined, comp("id") === col("cid"), "left")
-          .select(col("id"), coalesce(col("mcomp"), col("component")).as("component"))
-          .transform(graft.graph.Iterate.ckpt)
-        active = joined.select(col("cid").as("id"), col("mcomp").as("component"))
-        iter += 1
-        log += ((iter, nupdates))
-      }
-    }
+    // symmetric: every vertex is a source
+    val (comp, changed) = Pregel.run(sym.select(col("src").as("id")).distinct(), sym,
+      initial = Map("component" -> col("id")),
+      sendMsg = col("src_component"),
+      aggMsg = min(col("msg")),
+      update = Map("component" -> least(col("component"), col("msg"))),
+      maxIter = maxIter, activeOnly = true)
     val spark = edges.sparkSession
     import spark.implicits._
-    (comp, log.toSeq.toDF("iter", "nupdates"))
+    val log = changed.takeWhile(_ > 0).zipWithIndex.map { case (n, i) => (i + 1, n) }
+    (comp, log.toDF("iter", "nupdates"))
   }
 
   /** Community detection by label propagation (most-frequent neighbor
@@ -397,37 +378,32 @@ object Algorithms {
                              numLabels: Int, iterations: Int = 10,
                              alpha: Double = 0.15): DataFrame =
       graft.GraftSession.withTrainerAggCapacity(edges.sparkSession) {
+    // materialized once: the vertex set and the runner's adjacency are
+    // both built from it without re-reading `edges`
     val e = edges.select(col("src"), col("dst"),
         (if (edges.columns.contains("weight")) col("weight").cast("double")
          else lit(1.0)).as("w"))
-      .repartition(col("src")).transform(graft.graph.Iterate.ckpt)
+      .transform(graft.graph.Iterate.ckpt)
     val verts = PropertyGraph.fromEdges(e).vertices
+      .join(seeds.withColumnRenamed("label", "__seed"), Seq("id"), "left")
     val oneHot = (l: Column) => transform(sequence(lit(0), lit(numLabels - 1)),
       i => when(i === l, 1.0d).otherwise(0.0d))
     val uniform = array_repeat(lit(1.0d / numLabels), numLabels)
-    var state = verts.join(seeds.withColumnRenamed("label", "__seed"), Seq("id"), "left")
-      .select(col("id"), col("__seed").isNotNull.as("fixed"),
-        when(col("__seed").isNotNull, oneHot(col("__seed"))).otherwise(uniform).as("dist"))
-      .transform(graft.graph.Iterate.ckpt)
-    for (i <- 1 to iterations) {
-      // r15: native VecScale for the per-edge weighted copy and the
-      // per-vertex renormalize (interpreted HOFs before; bit-exact)
-      val msgs = e.join(state, e("src") === state("id"))
-        .select(col("dst").as("mid"),
-          graft.functions.VecMath.scale(col("dist"), col("w")).as("wd"), col("w"))
-        .groupBy("mid")
-        .agg(graft.functions.VecSum.of(col("wd"), numLabels).as("sumd"),
-          sum("w").as("sw"))
-        .select(col("mid"),
-          graft.functions.VecMath.scaleDiv(col("sumd"), col("sw")).as("avg"))
-      val updated = state.join(msgs, state("id") === col("mid"), "left")
-        .select(col("id"), col("fixed"),
-          when(col("fixed") || col("avg").isNull, col("dist"))
-            .otherwise(zip_with(col("dist"), col("avg"),
-              (d, m) => lit(alpha) * d + lit(1 - alpha) * m)).as("dist"))
-      state = if (i % 2 == 0 || i == iterations)
-        updated.transform(graft.graph.Iterate.ckpt) else updated
-    }
+    // r15: native VecScale for the per-edge weighted copy and the
+    // per-vertex renormalize (interpreted HOFs before; bit-exact)
+    val avg = graft.functions.VecMath.scaleDiv(col("msg.sumd"), col("msg.sw"))
+    val (state, _) = Pregel.run(verts, e,
+      initial = Map("fixed" -> col("__seed").isNotNull,
+        "dist" -> when(col("__seed").isNotNull, oneHot(col("__seed"))).otherwise(uniform)),
+      sendMsg = struct(
+        graft.functions.VecMath.scale(col("src_dist"), col("w")).as("wd"), col("w")),
+      aggMsg = struct(graft.functions.VecSum.of(col("msg.wd"), numLabels).as("sumd"),
+        sum(col("msg.w")).as("sw")),
+      update = Map("fixed" -> col("fixed"),
+        "dist" -> when(col("fixed") || col("msg").isNull, col("dist"))
+          .otherwise(zip_with(col("dist"), avg,
+            (d, m) => lit(alpha) * d + lit(1 - alpha) * m))),
+      maxIter = iterations)
     state.select(col("id"),
       expr("array_position(dist, array_max(dist)) - 1").as("label"), col("dist"))
   }

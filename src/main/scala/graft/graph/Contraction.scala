@@ -65,27 +65,15 @@ object Contraction {
         }
       }
       if (live > 0) {
-        // --- forward min-color flood to fixpoint
-        var color = remaining.withColumn("color", col("id"))
-          .transform(graft.graph.Iterate.ckpt)
-        var changed = true
-        while (changed) {
-          val msgs = e.join(color, e("src") === color("id"))
-            .groupBy(col("dst").as("mid")).agg(min("color").as("mc"))
-          // r16 (supersedes the r15 staged-checkpoint shape, which still
-          // ran a separate changed-count job over the materialized
-          // blocks): the changed-count is accumulated during the
-          // checkpoint materialization itself — the superstep is ONE job.
-          val (upd, nchanged) = graft.graph.Iterate.ckptSum(
-            color.join(msgs, color("id") === col("mid"), "left")
-              .select(col("id"),
-                least(col("color"), coalesce(col("mc"), col("color"))).as("ncolor"),
-                (col("color") > coalesce(col("mc"), col("color")))
-                  .cast("long").as("chg")),
-            "chg")
-          color = upd.select(col("id"), col("ncolor").as("color"))
-          changed = nchanged > 0
-        }
+        // --- forward min-color flood to fixpoint: only recolored
+        // vertices send, and the run ends at the first superstep that
+        // recolors nothing
+        val (color, _) = Pregel.run(remaining, e,
+          initial = Map("color" -> col("id")),
+          sendMsg = col("src_color"),
+          aggMsg = min(col("msg")),
+          update = Map("color" -> least(col("color"), col("msg"))),
+          maxIter = Int.MaxValue, activeOnly = true)
         // --- backward confirm: reverse-BFS from each color root through
         // vertices of the same color; reached set = that SCC
         val roots = color.filter(col("id") === col("color"))
@@ -122,11 +110,13 @@ object Contraction {
           remaining.join(reached, Seq("id"), "left_anti"))
         remaining = rem2
         live = live2
-        e = e.join(reached.withColumnRenamed("id", "t1").select("t1"),
-            col("src") === col("t1"), "left_anti")
-          .join(reached.withColumnRenamed("id", "t2").select("t2"),
-            col("dst") === col("t2"), "left_anti")
-          .transform(graft.graph.Iterate.ckpt)
+        // only a later phase reads the edge set
+        if (live > 0)
+          e = e.join(reached.withColumnRenamed("id", "t1").select("t1"),
+              col("src") === col("t1"), "left_anti")
+            .join(reached.withColumnRenamed("id", "t2").select("t2"),
+              col("dst") === col("t2"), "left_anti")
+            .transform(graft.graph.Iterate.ckpt)
       }
       phase += 1
     }

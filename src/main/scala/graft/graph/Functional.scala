@@ -38,6 +38,6 @@ object Functional {
       sendMsg = kernel.valueToNeighbor,
       aggMsg = kernel.plus,
       update = Map("value" -> kernel.compute),
-      maxIter = iterations)
+      maxIter = iterations)._1
   }
 }

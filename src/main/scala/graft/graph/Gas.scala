@@ -12,7 +12,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * sum      → the message merge aggregate
   * apply    → the vertex update expressions
   * scatter  → implicit: the next superstep's gather reads the new state;
-  *            selective signalling = null messages (activeOnly)
+  *            a null gather sends nothing, and with `activeOnly` only
+  *            the vertices whose state changed last superstep gather
+  *            again (the reference's selective signalling); the run
+  *            stops when a superstep changes nothing
   */
 final case class GasProgram(
     initial: Map[String, Column],
@@ -31,5 +34,5 @@ object Gas {
       aggMsg = program.sum,
       update = program.apply,
       maxIter = iterations,
-      activeOnly = program.activeOnly)
+      activeOnly = program.activeOnly)._1
 }

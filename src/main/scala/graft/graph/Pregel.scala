@@ -7,14 +7,17 @@ import org.apache.spark.sql.functions._
   * replacement for the reference's engine loop
   * (`src/engine/graphchi_engine.hpp:718-992`) and its GAS / functional
   * APIs (`src/api/graphlab2_1_GAS_api/graphchi_graphlabv2_1.hpp:42-67`,
-  * `src/api/functional/functional_api.hpp:55-137`).
+  * `src/api/functional/functional_api.hpp:55-137`). It is the one
+  * superstep loop of the library: connected components, SCC's colour
+  * flood, seeded label propagation and the GAS / functional facades all
+  * run on it.
   *
   * Semantics: bulk-synchronous. The reference defaults to asynchronous
   * updates (`README.md:30`); fixpoints agree, iteration counts may not
   * (SURVEY.md §7.5). Selective scheduling
-  * (`src/engine/bitset_scheduler.hpp:38-96`) maps to the active-message
-  * set: a superstep's messages only reach vertices that must recompute,
-  * and the loop terminates when no messages flow.
+  * (`src/engine/bitset_scheduler.hpp:38-96`) maps to `activeOnly`: a
+  * vertex sends only in the superstep after its state changed, and the
+  * loop stops at the first superstep that changes nothing.
   *
   * Execution shape per superstep (all declarative, Catalyst-planned):
   * edges are grouped ONCE into chunked out-adjacency rows — GraphChi's
@@ -22,18 +25,31 @@ import org.apache.spark.sql.functions._
   * superstep joins RANK rows (~|V| adjacency rows) instead of |E| edge
   * rows, explodes the chunk inside the task, evaluates `sendMsg` on the
   * restored (edge ⋈ src-state) row, and aggregates:
-  *   messages  = adj ⋈ vertices ON src → explode(chunk) → msgExpr
-  *   inbox     = messages.groupBy(dst).agg(aggExpr)      (one shuffle)
+  *   messages  = adj ⋈ senders ON src → explode(chunk) → sendMsg
+  *   inbox     = messages.groupBy(dst).agg(aggMsg)      (one shuffle)
   *   vertices' = vertices LEFT JOIN inbox  →  update columns
   * Chunking splits a power-law hub's out-list over several rows
   * (about [[PropertyGraph.AdjacencyChunk]] edges each).
-  * The adjacency and vertex sides stay hash-partitioned on the join key
-  * across supersteps (the checkpoint preserves partitioning), so one
-  * superstep runs a single exchange — the inbox aggregation.
-  * Lineage is cut with localCheckpoint every `checkpointInterval`
-  * supersteps, else the plan grows unboundedly (SURVEY.md §7.5).
+  * The intended shape keeps the adjacency and vertex sides
+  * hash-partitioned on the join key across supersteps, so that a
+  * superstep runs a single exchange — the inbox aggregation. Under AQE
+  * the checkpoints report unknown partitioning (their materialized plan
+  * is adaptive), so today a superstep also re-shuffles the state, the
+  * senders and the adjacency.
+  * The adjacency is built on the first superstep, and the initial state
+  * is materialized by the first superstep's checkpoint, not by one of
+  * its own. An `activeOnly` superstep is one materialization: the new
+  * state plus a changed flag, checkpointed with the changed count
+  * summed in the same pass ([[Iterate.ckptSum]]); the next superstep's
+  * senders are that checkpoint filtered on the flag. Other runs cut
+  * lineage every `CheckpointInterval` supersteps, else the plan grows
+  * unboundedly (SURVEY.md §7.5), and once more at the end only if the
+  * last superstep was not materialized.
   */
 object Pregel {
+
+  /** Supersteps between lineage cuts of a run that is not `activeOnly`. */
+  private val CheckpointInterval = 2
 
   /** Column-expression Pregel, GraphFrames-style.
     *
@@ -42,19 +58,25 @@ object Pregel {
     * @param initial    per-state-column init expressions, over `vertices`
     * @param sendMsg    message expression evaluated over the joined row
     *                   (edge cols + `src_*` vertex state cols);
-    *                   null means "send nothing" (selective scheduling)
+    *                   null means "send nothing"
     * @param aggMsg     merge expression over column `msg`
     * @param update     per-state-column new-value expressions, over the
     *                   vertex state joined with aggregated `msg`
     *                   (null `msg` = vertex received nothing)
     * @param maxIter    superstep cap
-    * @param activeOnly true = Pregel active-set semantics (the
-    *                   reference's bitset scheduler): messages are sent
-    *                   only by vertices that were active (all vertices in
-    *                   superstep 1; afterwards only message receivers), a
-    *                   vertex with no inbound message keeps its state
-    *                   untouched, and the loop stops once no messages
-    *                   flow
+    * @param activeOnly true = the reference's selective scheduling: every
+    *                   vertex sends in superstep 1, afterwards only the
+    *                   vertices whose state changed (a null-safe compare
+    *                   of every state column) in the previous superstep;
+    *                   a vertex with no inbound message keeps its state
+    *                   untouched; the loop stops after the first
+    *                   superstep that changes no vertex. A vertex that
+    *                   receives messages but keeps its value does not
+    *                   send again, so a flood over a cycle terminates.
+    * @return the final state (`id` + state columns) and, for an
+    *         `activeOnly` run, the number of vertices changed in each
+    *         superstep run (one entry per superstep, the last one 0
+    *         unless `maxIter` cut the run); empty otherwise
     */
   def run(
       vertices: DataFrame,
@@ -64,61 +86,57 @@ object Pregel {
       aggMsg: Column,
       update: Map[String, Column],
       maxIter: Int,
-      activeOnly: Boolean = false,
-      checkpointInterval: Int = 2): DataFrame = {
+      activeOnly: Boolean = false): (DataFrame, Seq[Long]) = {
 
     val stateCols = initial.keys.toSeq
     var v = vertices.select(
       (col("id") +: stateCols.map(c => initial(c).as(c))): _*)
-    v = v.transform(graft.graph.Iterate.ckpt)
 
     // Chunked out-adjacency, built once, carrying every non-src edge
     // column as a struct list; the chunk explodes inside the task, after
     // the per-superstep join.
     val edgeAttrs = edges.columns.filterNot(_ == "src").toSeq
-    val adj = PropertyGraph(vertices, edges)
+    lazy val adj = PropertyGraph(vertices, edges)
       .chunkedOutAdjacency(struct(edgeAttrs.map(col): _*))
       .select("src", "nbrs")
       .transform(graft.graph.Iterate.ckpt)
+    val srcCols = "src" +: stateCols.map(c => s"src_$c")
 
-    var frontier: DataFrame = null  // null = all vertices active
+    var senders = v // every vertex, or (activeOnly) those changed last superstep
+    var materialized = false // v is a checkpoint
+    val changed = scala.collection.mutable.ArrayBuffer.empty[Long]
     var iter = 0
-    var done = false
-    while (iter < maxIter && !done) {
-      val srcState = v.select(
-        (col("id").as("__src_id") +: stateCols.map(c => col(c).as(s"src_$c"))): _*)
-      val srcV = if (activeOnly && frontier != null)
-        srcState.join(frontier, srcState("__src_id") === frontier("__fid"), "left_semi")
-      else srcState
-      val srcCols = Seq(col("src")) ++ stateCols.map(c => col(s"src_$c"))
-      val msgs = adj.join(srcV, adj("src") === col("__src_id"))
-        .select(srcCols :+ explode(col("nbrs")).as("__e"): _*)
-        .select(srcCols ++ edgeAttrs.map(a => col(s"__e.$a").as(a)): _*)
+    while (iter < maxIter && !changed.lastOption.contains(0L)) {
+      val msgs = adj.join(senders, adj("src") === senders("id"))
+        .select(adj("src") +: stateCols.map(c => senders(c).as(s"src_$c")) :+
+          explode(adj("nbrs")).as("__e"): _*)
+        .select(srcCols.map(col) ++ edgeAttrs.map(a => col(s"__e.$a").as(a)): _*)
         .select(col("dst").as("__dst"), sendMsg.as("msg"))
         .filter(col("msg").isNotNull)
-      val agg = msgs.groupBy(col("__dst")).agg(aggMsg.as("msg"))
-      // activeOnly: the inbox is the next frontier, so it is materialized
-      // anyway; its row count — the termination test — comes from that
-      // same job rather than a separate isEmpty job per superstep.
-      val (inbox, received) =
-        if (activeOnly) graft.graph.Iterate.ckptN(agg) else (agg, -1L)
-
-      if (received == 0L) {
-        done = true
+      val inbox = msgs.groupBy(col("__dst")).agg(aggMsg.as("msg"))
+      val joined = v.join(inbox, v("id") === col("__dst"), "left")
+      val next = stateCols.map { c =>
+        if (activeOnly) when(col("msg").isNull, col(c)).otherwise(update(c))
+        else update(c)
+      }
+      val newState = col("id") +: stateCols.zip(next).map { case (c, u) => u.as(c) }
+      iter += 1
+      materialized = activeOnly || iter % CheckpointInterval == 0
+      if (activeOnly) {
+        val flag = stateCols.zip(next).map { case (c, u) => !(u <=> col(c)) }
+          .reduce(_ || _)
+        val (state, n) = graft.graph.Iterate.ckptSum(
+          joined.select(newState :+ flag.cast("long").as("__changed"): _*),
+          "__changed")
+        v = state.select((col("id") +: stateCols.map(col)): _*)
+        senders = state.filter(col("__changed") === 1L)
+        changed += n
       } else {
-        val joined = v.join(inbox, v("id") === col("__dst"), "left")
-        val updated = joined.select(
-          (col("id") +: stateCols.map { c =>
-            val u = update(c)
-            (if (activeOnly) when(col("msg").isNull, col(c)).otherwise(u) else u).as(c)
-          }): _*)
-        v = if ((iter + 1) % checkpointInterval == 0 || activeOnly)
-          updated.transform(graft.graph.Iterate.ckpt)
-        else updated
-        if (activeOnly) frontier = inbox.select(col("__dst").as("__fid"))
-        iter += 1
+        v = joined.select(newState: _*)
+        if (materialized) v = v.transform(graft.graph.Iterate.ckpt)
+        senders = v
       }
     }
-    v.transform(graft.graph.Iterate.ckpt)
+    (if (materialized) v else v.transform(graft.graph.Iterate.ckpt), changed.toSeq)
   }
 }

@@ -55,6 +55,59 @@ class AlgorithmsSpec extends SparkSpec {
     assert(cc.forall(_.getLong(1) == 1L))
   }
 
+  test("connectedComponentsWithDeltaLog: exact per-superstep counts on a path plus a pair") {
+    // path 1-2-3-4-5 and pair 10-11. Superstep 1 relabels 2..5 and 11;
+    // then only changed vertices send, so the path's min label moves one
+    // hop per superstep: 3,4,5 change, then 4,5, then 5, then nothing.
+    val e = edges(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L, 10L -> 11L)
+    def run(maxIter: Int) = {
+      val (cc, log) = Algorithms.connectedComponentsWithDeltaLog(e, maxIter)
+      (cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        log.orderBy("iter").collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq)
+    }
+    val (labels, log) = run(50)
+    assert(labels == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      10L -> 10L, 11L -> 10L))
+    assert(log == Seq(1 -> 5L, 2 -> 3L, 3 -> 2L, 4 -> 1L))
+    val (cut, cutLog) = run(2)
+    assert(cut == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L,
+      10L -> 10L, 11L -> 10L))
+    assert(cutLog == Seq(1 -> 5L, 2 -> 3L))
+    val (ident, identLog) = run(0)
+    assert(ident == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L, 5L -> 5L,
+      10L -> 10L, 11L -> 11L))
+    assert(identLog.isEmpty)
+  }
+
+  test("CC labels and delta log, and SCC labels, do not depend on shuffle partitions") {
+    val rnd = new scala.util.Random(11)
+    val pairs = Seq.fill(260)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong)) ++
+      (300L until 320L).map(i => i -> (i + 1)) // a path: a long tail of supersteps
+    val e = edges(pairs: _*)
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def results(parts: Int) = {
+      spark.conf.set(key, parts.toString)
+      try {
+        val (cc, log) = Algorithms.connectedComponentsWithDeltaLog(e)
+        (cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+          log.orderBy("iter").collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq,
+          Contraction.stronglyConnectedComponents(e)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      } finally spark.conf.set(key, saved)
+    }
+    val base = results(1)
+    assert(base._1 == Algorithms.unionFindConnectedComponents(e)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(base._2.length >= 20)
+    for (parts <- Seq(7, 200)) {
+      val got = results(parts)
+      assert(got._1 == base._1, s"CC labels differ at $parts partitions")
+      assert(got._2 == base._2, s"CC delta log differs at $parts partitions")
+      assert(got._3 == base._3, s"SCC labels differ at $parts partitions")
+    }
+  }
+
   test("labelPropagation: clique converges to a single label") {
     val ids = 1L to 4L
     val e = edges((for { a <- ids; b <- ids if a != b } yield a -> b): _*)
@@ -120,7 +173,7 @@ class AlgorithmsSpec extends SparkSpec {
     val e = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (1L, 3L, 10.0), (3L, 4L, 1.0))
       .toDF("src", "dst", "w")
     val v = Seq(1L, 2L, 3L, 4L).toDF("id")
-    val dist = Pregel.run(
+    val (dist, _) = Pregel.run(
       vertices = v, edges = e,
       initial = Map("dist" -> when(col("id") === 1L, 0.0).otherwise(lit(Double.PositiveInfinity))),
       sendMsg = when(col("src_dist") + col("w") < lit(Double.PositiveInfinity),
