@@ -44,10 +44,11 @@ object Algorithms {
     // `ranks` carries only vertices that RECEIVE mass; a vertex absent
     // from it received nothing last round and sits at the reset floor,
     // folded in via coalesce at the adjacency join. One superstep is one
-    // vertex-side join + explode + one aggregation (a single shuffle:
-    // adj stays src-partitioned and pre-sorted — the checkpoint keeps
-    // partitioning AND ordering, so the merge join re-sorts only the
-    // fresh rank side — and the inbox agg output is id-partitioned).
+    // vertex-side join + explode + one aggregation. The intended shape
+    // keeps adj src-partitioned, so that the inbox aggregation is the
+    // superstep's single exchange; under AQE the checkpoints report
+    // unknown partitioning (their materialized plan is adaptive), so
+    // today a superstep also re-shuffles the adjacency and the rank side.
     // Dangling handling matches the reference (no out-edges → emits
     // nothing, mass dropped).
     var ranks: DataFrame = null // null ⇒ uniform pr = 1.0 (first round)
@@ -107,56 +108,56 @@ object Algorithms {
 
   /** Community detection by label propagation (most-frequent neighbor
     * label, larger label wins ties) — the reference's
-    * `example_apps/communitydetection.cpp:100-171` (tie-break `:150-153`).
-    * Synchronous variant; fixed iteration budget like the reference's
-    * default.
+    * `example_apps/communitydetection.cpp:100-171` (tie-break `:150-153`):
+    * a [[Pregel]] run in which every vertex sends its label each
+    * superstep. Synchronous variant; fixed iteration budget like the
+    * reference's default.
     */
   def labelPropagation(edges: DataFrame, iterations: Int = 5): DataFrame = {
     val sym = PropertyGraph.fromEdges(edges).symmetrize.edges
-      .repartition(col("src")).transform(graft.graph.Iterate.ckpt)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id")).transform(graft.graph.Iterate.ckpt)
-    for (i <- 1 to iterations) {
-      val freq = sym.join(labels, sym("src") === labels("id"))
-        .groupBy(col("dst").as("mid"), col("label").as("l"))
-        .agg(count(lit(1)).as("n"))
-        // most frequent; ties to larger label (communitydetection.cpp:150-153)
-        .groupBy("mid")
-        .agg(max_by(col("l"), struct(col("n"), col("l"))).as("newl"))
-      val updated = labels.join(freq, labels("id") === col("mid"), "left")
-        .select(col("id"), coalesce(col("newl"), col("label")).as("label"))
-      labels = if (i % 2 == 0 || i == iterations)
-        updated.transform(graft.graph.Iterate.ckpt) else updated
-    }
-    labels
+      .transform(graft.graph.Iterate.ckpt)
+    // symmetric: every vertex is a source
+    Pregel.run(sym.select(col("src").as("id")).distinct(), sym,
+      initial = Map("label" -> col("id")),
+      sendMsg = col("src_label"),
+      // the most frequent label, the larger on ties: `mode` breaks ties
+      // to the smallest value, and bitwise_not reverses the order
+      // without overflowing at Long.MinValue
+      aggMsg = bitwise_not(mode(bitwise_not(col("msg")), deterministic = true)),
+      update = Map("label" -> coalesce(col("msg"), col("label"))),
+      maxIter = iterations)._1
   }
 
   /** k-core decomposition by iterative peeling for a given k — the
-    * reference's `toolkits/graph_analytics/kcores.cpp:81-142` (peel:
-    * deactivate vertices with active-degree < k until stable). Returns
-    * vertices that survive in the k-core.
+    * reference's `toolkits/graph_analytics/kcores.cpp:81-142`: a
+    * [[Pregel]] `activeOnly` run in which a vertex whose live degree
+    * drops below k deactivates and tells each neighbour once, and the
+    * neighbour lowers its live degree. Returns the vertices that
+    * survive in the k-core.
+    *
+    * The initial state already removes the vertices of degree < k, so a
+    * run cut by `maxIter` has applied `maxIter + 1` peel rounds; the run
+    * stops early at the first superstep that changes no vertex.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    // r16 (guide §2 job cadence): every peel's edge count — the
-    // stability test — is harvested from the checkpoint materialization
-    // instead of a separate count() action re-scanning the blocks.
-    var (sym, prevEdges) = graft.graph.Iterate.ckptN(
-      PropertyGraph.fromEdges(edges).withoutSelfEdges.symmetrize.edges)
-    var stable = false
-    var iter = 0
-    while (!stable && iter < maxIter) {
-      val deg = sym.groupBy("src").agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select(col("src").as("kid"))
-      val (pruned, n) = graft.graph.Iterate.ckptN(
-        sym
-          .join(keep, sym("src") === keep("kid"), "left_semi")
-          .join(keep.withColumnRenamed("kid", "kid2"), sym("dst") === col("kid2"), "left_semi"))
-      if (n == prevEdges) stable = true
-      prevEdges = n
-      sym = pruned
-      iter += 1
-    }
-    sym.select(col("src").as("id")).distinct()
+    val sym = PropertyGraph.fromEdges(edges).withoutSelfEdges.symmetrize.edges
+      .transform(graft.graph.Iterate.ckpt)
+    val (deg, below) = graft.graph.Iterate.ckptSum(
+      sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
+        .withColumn("below", (col("d") < k).cast("long")),
+      "below")
+    // only a vertex below k ever sends; with none the graph is its own
+    // k-core, and the run and its adjacency build are skipped
+    if (below == 0L) return deg.select("id")
+    val (state, _) = Pregel.run(deg, sym,
+      initial = Map("alive" -> (col("d") >= k), "deg" -> col("d")),
+      sendMsg = when(!col("src_alive"), 1L),
+      aggMsg = sum(col("msg")),
+      update = Map(
+        "alive" -> (col("alive") && col("deg") - col("msg") >= k),
+        "deg" -> when(col("alive"), col("deg") - col("msg")).otherwise(col("deg"))),
+      maxIter = maxIter, activeOnly = true)
+    state.filter(col("alive")).select("id")
   }
 
   /** Per-vertex core number — the full decomposition the reference's

@@ -32,8 +32,9 @@ object Contraction {
     var (remaining, live) =
       graft.graph.Iterate.ckptN(PropertyGraph.fromEdges(e).vertices)
     // r16: assigned SCCs accumulate as LAZY projections over frames the
-    // loop already materializes (each `single` and `reached` is
-    // checkpointed), with one union at the end — the previous shape
+    // loop already materializes (each `single` is checkpointed, each
+    // `reached` filters the confirm run's final checkpoint), with one
+    // union at the end — the previous shape
     // re-checkpointed the monotonically growing `assigned` union every
     // trim round and every phase (guide §1.2 don't recompute).
     var assignedParts = Vector.empty[DataFrame]
@@ -75,36 +76,21 @@ object Contraction {
           update = Map("color" -> least(col("color"), col("msg"))),
           maxIter = Int.MaxValue, activeOnly = true)
         // --- backward confirm: reverse-BFS from each color root through
-        // vertices of the same color; reached set = that SCC
-        val roots = color.filter(col("id") === col("color"))
-          .select(col("id"), col("color"))
-        // r16: the reached set accumulates as LAZY unions over the
-        // per-step checkpoints (each step IS materialized), instead of
-        // re-checkpointing the whole growing union every BFS step; the
-        // step's emptiness test rides its checkpoint job (observe).
-        var reachedParts = Vector(
-          roots.withColumn("scc", col("color"))
-            .select("id", "scc").transform(graft.graph.Iterate.ckpt))
-        var frontier = reachedParts.head
-        var expanding = true
-        while (expanding) {
-          val reached = reachedParts.reduce(_ union _)
-          // traverse reversed edges: from dst to src, same color
-          val (step, nStep) = graft.graph.Iterate.ckptN(
-            e.join(frontier, e("dst") === frontier("id"))
-              .select(col("src").as("id"), col("scc"))
-              .join(color.withColumnRenamed("id", "cid"),
-                col("id") === col("cid") && col("scc") === col("color"), "left_semi")
-              .join(reached.withColumnRenamed("id", "rid").select("rid"),
-                col("id") === col("rid"), "left_anti")
-              .distinct())
-          if (nStep == 0L) expanding = false
-          else {
-            reachedParts :+= step
-            frontier = step
-          }
-        }
-        val reached = reachedParts.reduce(_ union _)
+        // vertices of the same color; reached set = that SCC. At the
+        // flood's fixpoint an edge v→u has color(u) <= color(v), so over
+        // the reversed edges a vertex hears only colors <= its own, and
+        // the largest it hears equals its own color iff a confirmed
+        // out-neighbour shares it.
+        val (confirmed, _) = Pregel.run(color,
+          e.select(col("dst").as("src"), col("src").as("dst")),
+          initial = Map("color" -> col("color"),
+            "scc" -> when(col("id") === col("color"), col("color"))),
+          sendMsg = col("src_scc"),
+          aggMsg = max(col("msg")),
+          update = Map("color" -> col("color"),
+            "scc" -> coalesce(col("scc"), when(col("msg") === col("color"), col("msg")))),
+          maxIter = Int.MaxValue, activeOnly = true)
+        val reached = confirmed.filter(col("scc").isNotNull).select("id", "scc")
         assignedParts :+= reached
         val (rem2, live2) = graft.graph.Iterate.ckptN(
           remaining.join(reached, Seq("id"), "left_anti"))

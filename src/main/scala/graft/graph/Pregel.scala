@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
   * replacement for the reference's engine loop
   * (`src/engine/graphchi_engine.hpp:718-992`) and its GAS / functional
   * APIs (`src/api/graphlab2_1_GAS_api/graphchi_graphlabv2_1.hpp:42-67`,
-  * `src/api/functional/functional_api.hpp:55-137`). It is the one
-  * superstep loop of the library: connected components, SCC's colour
-  * flood, seeded label propagation and the GAS / functional facades all
-  * run on it.
+  * `src/api/functional/functional_api.hpp:55-137`). Connected
+  * components, label propagation (plain and seeded), k-core peeling,
+  * SCC's forward colour flood and backward confirm, and the GAS /
+  * functional facades all run on it.
   *
   * Semantics: bulk-synchronous. The reference defaults to asynchronous
   * updates (`README.md:30`); fixpoints agree, iteration counts may not

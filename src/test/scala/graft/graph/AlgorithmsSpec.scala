@@ -79,32 +79,37 @@ class AlgorithmsSpec extends SparkSpec {
     assert(identLog.isEmpty)
   }
 
-  test("CC labels and delta log, and SCC labels, do not depend on shuffle partitions") {
+  test("CC, SCC, LPA and 2-core results do not depend on shuffle partitions") {
     val rnd = new scala.util.Random(11)
     val pairs = Seq.fill(260)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong)) ++
       (300L until 320L).map(i => i -> (i + 1)) // a path: a long tail of supersteps
     val e = edges(pairs: _*)
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def results(parts: Int) = {
       spark.conf.set(key, parts.toString)
       try {
         val (cc, log) = Algorithms.connectedComponentsWithDeltaLog(e)
-        (cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        (labels(cc),
           log.orderBy("iter").collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq,
-          Contraction.stronglyConnectedComponents(e)
-            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+          labels(Contraction.stronglyConnectedComponents(e)),
+          labels(Algorithms.labelPropagation(e)),
+          Algorithms.kCore(e, 2).collect().map(_.getLong(0)).toSet)
       } finally spark.conf.set(key, saved)
     }
     val base = results(1)
-    assert(base._1 == Algorithms.unionFindConnectedComponents(e)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(base._1 == labels(Algorithms.unionFindConnectedComponents(e)))
     assert(base._2.length >= 20)
+    assert(base._5.nonEmpty && !base._5.contains(320L))
     for (parts <- Seq(7, 200)) {
       val got = results(parts)
       assert(got._1 == base._1, s"CC labels differ at $parts partitions")
       assert(got._2 == base._2, s"CC delta log differs at $parts partitions")
       assert(got._3 == base._3, s"SCC labels differ at $parts partitions")
+      assert(got._4 == base._4, s"label propagation differs at $parts partitions")
+      assert(got._5 == base._5, s"2-core differs at $parts partitions")
     }
   }
 
@@ -120,6 +125,44 @@ class AlgorithmsSpec extends SparkSpec {
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L)
     val core = Algorithms.kCore(e, 2).collect().map(_.getLong(0)).toSet
     assert(core == Set(1L, 2L, 3L))
+  }
+
+  // Vertex 1's neighbours 2, 3 take label 9 and 4, 5 take label 7 in
+  // superstep 1 (each breaks a 1-1 tie to the larger label), so in
+  // superstep 2 vertex 1's in-labels tie 2-2 between 9 and 7.
+  private val tieGraph = Seq(1L -> 2L, 1L -> 3L, 1L -> 4L, 1L -> 5L,
+    2L -> 9L, 3L -> 9L, 4L -> 7L, 5L -> 7L)
+  private val tieLabels = Map(1L -> 9L, 2L -> 5L, 3L -> 5L, 4L -> 5L,
+    5L -> 5L, 7L -> 7L, 9L -> 9L)
+
+  test("labelPropagation: a 2-2 tie of in-labels goes to the larger label") {
+    val lp = Algorithms.labelPropagation(edges(tieGraph: _*), iterations = 2)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(lp == tieLabels)
+  }
+
+  test("labelPropagation: ids at both ends of the long range, duplicate edges counted once") {
+    // Order-preserving relabellings put the tie's labels at Long.MaxValue
+    // and vertex 1 at Long.MinValue. The duplicate of 4-1 (also as 1-4)
+    // would make label 7 win vertex 1 three to two if it were counted.
+    for (f <- Seq[Long => Long](_ + (Long.MaxValue - 9L), _ + (Long.MinValue - 1L))) {
+      val dup = tieGraph ++ Seq(4L -> 1L, 1L -> 4L)
+      val lp = Algorithms.labelPropagation(
+          edges(dup.map { case (a, b) => f(a) -> f(b) }: _*), iterations = 2)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(lp == tieLabels.map { case (v, l) => f(v) -> f(l) })
+    }
+  }
+
+  test("kCore: a path hanging off a triangle peels one vertex per superstep") {
+    // 2-core of triangle 1-2-3 plus path 3-4-5-6-7: 7 starts below k,
+    // then 6, 5 and 4 drop out one superstep each, and 3 keeps degree 2.
+    val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L, 4L -> 5L, 5L -> 6L, 6L -> 7L)
+    def core(maxIter: Int) = Algorithms.kCore(e, 2, maxIter).collect().map(_.getLong(0)).toSet
+    assert(core(50) == Set(1L, 2L, 3L))
+    // a cut run has applied the initial cut plus maxIter peel rounds
+    assert(core(2) == Set(1L, 2L, 3L, 4L))
+    assert(core(0) == Set(1L, 2L, 3L, 4L, 5L, 6L))
   }
 
   test("coreness: K4 plus tail — clique is 3-core, tail peels at 1") {

@@ -24,6 +24,35 @@ class ContractionSpec extends SparkSpec {
     assert(scc == Map(1L -> 1L, 2L -> 2L, 3L -> 3L))
   }
 
+  test("SCC: matches a local Tarjan on a seeded random digraph") {
+    val rnd = new scala.util.Random(23)
+    val pairs = Seq.fill(400)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .filter { case (a, b) => a != b }
+    val scc = Contraction.stronglyConnectedComponents(pairs.toDF("src", "dst"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // Tarjan's algorithm, each component labelled by its minimum id
+    val out = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
+    val verts = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val index = scala.collection.mutable.Map[Long, Int]()
+    val low = scala.collection.mutable.Map[Long, Int]()
+    val stack = scala.collection.mutable.Stack[Long]()
+    val want = scala.collection.mutable.Map[Long, Long]()
+    def visit(v: Long): Unit = {
+      index(v) = index.size; low(v) = index(v); stack.push(v)
+      for (w <- out.getOrElse(v, Nil)) {
+        if (!index.contains(w)) { visit(w); low(v) = math.min(low(v), low(w)) }
+        else if (stack.contains(w)) low(v) = math.min(low(v), index(w))
+      }
+      if (low(v) == index(v)) {
+        val comp = Iterator.continually(stack.pop()).takeWhile(_ != v).toSeq :+ v
+        comp.foreach(want(_) = comp.min)
+      }
+    }
+    verts.foreach(v => if (!index.contains(v)) visit(v))
+    assert(want.values.toSet.size < verts.size, "the digraph has a non-trivial SCC")
+    assert(scc == want.toMap)
+  }
+
   test("MSF: known minimum spanning tree") {
     //   1-2 (1), 2-3 (2), 1-3 (10), 3-4 (3)  → MST = {1-2, 2-3, 3-4}, w=6
     val e = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (1L, 3L, 10.0), (3L, 4L, 3.0))

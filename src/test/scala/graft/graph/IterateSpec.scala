@@ -7,8 +7,8 @@ import graft.SparkSpec
   * `ckptSum`): the count/sum must come from the materializing pass
   * itself (no separate action), the returned frame must be materialized
   * and row-identical to the input, re-reads must not perturb the
-  * harvested values, and the partitioning-preservation property of the
-  * plain checkpoint must survive (same LogicalRDD rebuild path).
+  * harvested values, and a join over it must plan like a join over the
+  * plain checkpoint (same LogicalRDD rebuild path).
   */
 class IterateSpec extends SparkSpec {
   import spark.implicits._
@@ -55,18 +55,23 @@ class IterateSpec extends SparkSpec {
     }
   }
 
-  test("ckptN preserves output partitioning like ckpt does") {
-    val df = Seq((1L, 2L), (3L, 4L), (1L, 5L)).toDF("k", "v")
-      .repartition(col("k"))
-    val (out, _) = Iterate.ckptN(df)
-    // a re-join on the same key must not need a fresh exchange on the
-    // checkpointed side — the same property freshCheckpoint preserves
-    val other = Seq((1L, 9L)).toDF("k", "w").repartition(col("k"))
-    val joined = out.join(other, "k")
-    val plan = joined.queryExecution.executedPlan.toString
-    val nExchanges = "Exchange hashpartitioning".r
-      .findAllIn(plan).length
-    assert(nExchanges <= 1, s"expected the ckptN side to keep its " +
-      s"partitioning (≤1 exchange for the fresh side), got:\n$plan")
+  test("a join over ckptN output plans as many hash exchanges as over ckpt output") {
+    // broadcast off: a broadcast join plans no exchange on either side,
+    // whatever partitioning the checkpoint reports
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try {
+      val df = Seq((1L, 2L), (3L, 4L), (1L, 5L)).toDF("k", "v")
+        .repartition(col("k"))
+      val other = Seq((1L, 9L)).toDF("k", "w").repartition(col("k"))
+      def exchanges(ck: org.apache.spark.sql.DataFrame) = {
+        val plan = ck.join(other, "k").queryExecution.executedPlan.toString
+        ("Exchange hashpartitioning".r.findAllIn(plan).length, plan)
+      }
+      val (nCkpt, planCkpt) = exchanges(Iterate.ckpt(df))
+      val (nCkptN, planCkptN) = exchanges(Iterate.ckptN(df)._1)
+      assert(nCkptN === nCkpt, s"ckpt plan:\n$planCkpt\nckptN plan:\n$planCkptN")
+    } finally spark.conf.set(key, saved)
   }
 }
