@@ -1,7 +1,13 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuilder
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Graph algorithm library — the reference's `example_apps/` and
   * `toolkits/graph_analytics/` programs (SURVEY.md §2.10), re-expressed as
@@ -12,62 +18,190 @@ object Algorithms {
 
   /** PageRank, fixed iterations, damping 0.85 — the reference's
     * `example_apps/pagerank.cpp:73-113` (pr = 0.15 + 0.85·Σ in-values,
-    * in-value = neighbor pr / outdeg).
+    * in-value = neighbor pr / outdeg). Dangling-vertex mass follows the
+    * reference: a vertex with no out-edges emits nothing, and its mass is
+    * dropped, not redistributed. Duplicate edges and self-loops count.
     *
-    * Scale notes: the out-adjacency is grouped once into chunked
-    * (src, dst-array, 1/odeg) rows, so the per-iteration work is one
-    * vertex-count join + in-task explode + one aggregation — a single
-    * |E|-row shuffle per superstep; dangling-vertex mass follows the
-    * reference (it is dropped, not redistributed — GraphChi vertices
-    * with no out-edges simply emit nothing).
+    * The superstep is the reference's in-memory multiply-add
+    * (`pagerank.cpp:121-146`) over dense arrays, partitioned as in GraphX:
+    * vertices are hash-partitioned by id into `spark.sql.shuffle.partitions`
+    * partitions, each holding its ids sorted, and a vertex's local index
+    * is its position in that order. One shuffle of edge blocks, which
+    * sends each edge to its source's and to its destination's partition,
+    * builds, once per call, a cached [[RankPart]] per partition:
+    *   - sender side: 1/outdeg per local source and, per target
+    *     partition, each edge's local source and its slot among the
+    *     distinct destinations of that (source, target) partition pair;
+    *   - receiver side: per source partition, slot → local destination.
+    * Both sides number a pair's slots by sorted destination id, so they
+    * agree without exchanging a routing table. A superstep is one narrow
+    * pass (`out(slot) += pr(s)/outdeg(s)`, one array per target
+    * partition; superstep 1 sends from pr = 1.0), one shuffle of those
+    * `Array[Double]`s, and one narrow reduce that adds them in
+    * source-partition order and sets pr = resetProb + (1 − resetProb)·sum.
+    * A vertex that receives nothing sits at resetProb. Every sum runs in
+    * a fixed order, so the ranks are bit-reproducible for a given
+    * partition count.
+    *
+    * The result is lazy: the build and every superstep run as stages of
+    * the job of the caller's action, with no Spark job, query plan or
+    * checkpoint of their own. Edges with a null endpoint are skipped;
+    * `iterations <= 0` gives the uniform init (pr = 1.0).
     */
   def pageRank(edges: DataFrame, iterations: Int = 4,
                resetProb: Double = 0.15): DataFrame = {
-    val g = PropertyGraph.fromEdges(edges.select("src", "dst"))
-    // Adjacency-grouped contributions: one row per (src, chunk-of-dsts)
-    // with the 1/odeg weight. Joining RANK rows (|V|) instead of EDGE
-    // rows (|E|) and exploding inside the task cuts the per-superstep
-    // join ~|E|/|V| fold (measured 2-3× end-to-end on the 32M-edge
-    // probe). The adjacency and vertex-set materializations are
-    // independent — overlap their jobs (Iterate.ckptAll).
-    val pre = graft.graph.Iterate.ckptAll(
-      g.chunkedOutAdjacency(col("dst"))
-        .select(col("src"), col("nbrs"), (lit(1.0) / col("odeg")).as("w")),
-      g.vertices)
-    val adj = pre(0)
-    val verts = pre(1)
-    // iterations = 0 ⇒ the uniform init (pr = 1.0), not an NPE on the
-    // never-assigned rank frame.
-    if (iterations <= 0)
-      return verts.select(col("id"), lit(1.0).as("pr"))
-
-    // `ranks` carries only vertices that RECEIVE mass; a vertex absent
-    // from it received nothing last round and sits at the reset floor,
-    // folded in via coalesce at the adjacency join. One superstep is one
-    // vertex-side join + explode + one aggregation. The intended shape
-    // keeps adj src-partitioned, so that the inbox aggregation is the
-    // superstep's single exchange; under AQE the checkpoints report
-    // unknown partitioning (their materialized plan is adaptive), so
-    // today a superstep also re-shuffles the adjacency and the rank side.
-    // Dangling handling matches the reference (no out-edges → emits
-    // nothing, mass dropped).
-    var ranks: DataFrame = null // null ⇒ uniform pr = 1.0 (first round)
-    for (i <- 1 to iterations) {
-      val sent = if (ranks == null)
-        adj.select(explode(col("nbrs")).as("dst"), col("w").as("m"))
-      else
-        adj.join(ranks, adj("src") === ranks("id"), "left")
-          .select(explode(col("nbrs")).as("dst"),
-            (col("w") * coalesce(col("pr"), lit(resetProb))).as("m"))
-      val inbox = sent.groupBy(col("dst").as("id"))
-        .agg((lit(resetProb) + lit(1 - resetProb) * sum(col("m"))).as("pr"))
-      ranks = if (i % 2 == 0 || i == iterations)
-        inbox.transform(graft.graph.Iterate.ckpt) else inbox
+    val spark = edges.sparkSession
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val byIndex = new HashPartitioner(n) // an Int key is its own partition
+    val parts = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd
+      .mapPartitions(RankPart.route(n, _))
+      .partitionBy(byIndex)
+      .mapPartitionsWithIndex((p, blocks) => Iterator(RankPart.build(p, n, blocks.map(_._2))))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var ranks = parts.map(p => Array.fill(p.ids.length)(1.0))
+    for (_ <- 1 to iterations) {
+      val inbox = parts.zipPartitions(ranks)((p, pr) => p.next().send(pr.next()))
+        .partitionBy(byIndex)
+      ranks = parts.zipPartitions(inbox)(
+        (p, msgs) => Iterator(p.next().receive(msgs.map(_._2), resetProb)))
     }
-    // materialize the full vertex set once at the end: pure sources
-    // (no in-edges) never entered `ranks` and sit at the reset floor
-    verts.join(ranks, Seq("id"), "left")
-      .select(col("id"), coalesce(col("pr"), lit(resetProb)).as("pr"))
+    val rows = parts.zipPartitions(ranks) { (p, pr) =>
+      val (ids, r) = (p.next().ids, pr.next())
+      ids.indices.iterator.map(i => Row(ids(i), r(i)))
+    }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("pr", DoubleType, nullable = false))))
+  }
+
+  /** One vertex partition of [[pageRank]]: `ids` sorted, `w` = 1/outdeg
+    * per local vertex (0 without out-edges); per target partition q,
+    * `sendSrc(q)`/`sendSlot(q)` give each edge's local source and slot,
+    * ordered by (slot, source); per source partition p, `recv(p)` maps
+    * slot → local destination.
+    */
+  private final class RankPart(val index: Int, val ids: Array[Long], w: Array[Double],
+      sendSrc: Array[Array[Int]], sendSlot: Array[Array[Int]],
+      recv: Array[Array[Int]]) extends Serializable {
+
+    /** (target partition, (this partition, per-slot sums of pr/outdeg)). */
+    def send(pr: Array[Double]): Iterator[(Int, (Int, Array[Double]))] = {
+      val c = new Array[Double](ids.length)
+      var i = 0
+      while (i < c.length) { c(i) = w(i) * pr(i); i += 1 }
+      sendSlot.indices.iterator.filter(sendSlot(_).nonEmpty).map { q =>
+        val (src, slot) = (sendSrc(q), sendSlot(q))
+        val out = new Array[Double](slot.last + 1)
+        var e = 0
+        while (e < src.length) { out(slot(e)) += c(src(e)); e += 1 }
+        (q, (index, out))
+      }
+    }
+
+    /** The next ranks from the (source partition, sums) this partition got. */
+    def receive(msgs: Iterator[(Int, Array[Double])], resetProb: Double): Array[Double] = {
+      val from = new Array[Array[Double]](recv.length)
+      msgs.foreach { case (p, m) => from(p) = m }
+      val sum = new Array[Double](ids.length)
+      for (p <- from.indices if from(p) != null) {
+        val (m, to) = (from(p), recv(p))
+        var k = 0
+        while (k < m.length) { sum(to(k)) += m(k); k += 1 }
+      }
+      var i = 0
+      while (i < sum.length) { sum(i) = resetProb + (1 - resetProb) * sum(i); i += 1 }
+      sum
+    }
+  }
+
+  private object RankPart {
+    /** A vertex id's partition, after a 64-bit mix so that strided ids spread. */
+    def partOf(id: Long, n: Int): Int =
+      Math.floorMod(java.lang.Long.hashCode(scala.util.hashing.byteswap64(id)), n)
+
+    /** Pairs per edge block of [[route]]. */
+    private val Block = 4096
+
+    /** The edge rows of one input partition as blocks keyed by vertex
+      * partition: each edge goes to its source's partition as an out-edge
+      * (src, dst) and to its destination's as an in-edge (dst, src),
+      * interleaved into `Array[Long]`s of at most [[Block]] pairs, flagged
+      * `true` for in-edges. Rows with a null endpoint are skipped.
+      */
+    def route(n: Int, rows: Iterator[InternalRow]): Iterator[(Int, (Boolean, Array[Long]))] = {
+      val bufs = Array.fill(2 * n)(new ArrayBuilder.ofLong) // 2p: out-edges of p, 2p + 1: in-edges
+      def take(b: Int) = { val a = bufs(b).result(); bufs(b).clear(); (b / 2, (b % 2 == 1, a)) }
+      rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).flatMap { r =>
+        val (s, d) = (r.getLong(0), r.getLong(1))
+        val (o, i) = (2 * partOf(s, n), 2 * partOf(d, n) + 1)
+        bufs(o).addOne(s).addOne(d)
+        bufs(i).addOne(d).addOne(s)
+        if (bufs(o).length < 2 * Block && bufs(i).length < 2 * Block) Iterator.empty
+        else Iterator(o, i).filter(bufs(_).length >= 2 * Block).map(take)
+      } ++ bufs.indices.iterator.filter(bufs(_).length > 0).map(take)
+    }
+
+    /** Partition `index`'s arrays from its [[route]] blocks. */
+    def build(index: Int, n: Int, blocks: Iterator[(Boolean, Array[Long])]): RankPart = {
+      val (oSrc, oDst, iDst, iSrc) = unzip(blocks)
+      val ids = sortedDistinct(Array.concat(oSrc, iDst))
+      val oLoc = localIndex(ids, oSrc)
+      val deg = new Array[Int](ids.length)
+      oLoc.foreach(s => deg(s) += 1)
+      val w = deg.map(d => if (d == 0) 0.0 else 1.0 / d)
+      // sender: out-edges by target partition, a slot per distinct dst
+      val byTarget = groupByPart(oDst, n)
+      val sendSrc, sendSlot = new Array[Array[Int]](n)
+      for (q <- 0 until n) {
+        val es = byTarget(q)
+        val dsts = sortedDistinct(es.map(e => oDst(e)))
+        val keyed = es.map(e =>
+          (java.util.Arrays.binarySearch(dsts, oDst(e)).toLong << 32) | oLoc(e))
+        java.util.Arrays.sort(keyed)
+        sendSlot(q) = keyed.map(k => (k >>> 32).toInt)
+        sendSrc(q) = keyed.map(_.toInt)
+      }
+      // receiver: in-edges by source partition, slots numbered alike
+      val bySource = groupByPart(iSrc, n)
+      val recv = Array.tabulate(n)(p =>
+        localIndex(ids, sortedDistinct(bySource(p).map(e => iDst(e)))))
+      new RankPart(index, ids, w, sendSrc, sendSlot, recv)
+    }
+
+    /** (out-edge src, out-edge dst, in-edge dst, in-edge src) of the blocks. */
+    private def unzip(blocks: Iterator[(Boolean, Array[Long])]) = {
+      val (oSrc, oDst, iDst, iSrc) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong,
+        new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+      blocks.foreach { case (in, pairs) =>
+        val (a, b) = if (in) (iDst, iSrc) else (oSrc, oDst)
+        var k = 0
+        while (k < pairs.length) { a.addOne(pairs(k)); b.addOne(pairs(k + 1)); k += 2 }
+      }
+      (oSrc.result(), oDst.result(), iDst.result(), iSrc.result())
+    }
+
+    /** Sorts `xs` in place and returns its distinct values. */
+    private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+      java.util.Arrays.sort(xs)
+      var k = 0
+      for (i <- xs.indices if i == 0 || xs(i) != xs(i - 1)) { xs(k) = xs(i); k += 1 }
+      java.util.Arrays.copyOf(xs, k)
+    }
+
+    private def localIndex(ids: Array[Long], xs: Array[Long]): Array[Int] =
+      xs.map(x => java.util.Arrays.binarySearch(ids, x))
+
+    /** Indices of `keys`, grouped by the partition of each key. */
+    private def groupByPart(keys: Array[Long], n: Int): Array[Array[Int]] = {
+      val part = keys.map(partOf(_, n))
+      val size = new Array[Int](n)
+      part.foreach(q => size(q) += 1)
+      val groups = size.map(new Array[Int](_))
+      val fill = new Array[Int](n)
+      for (e <- part.indices) { groups(part(e))(fill(part(e))) = e; fill(part(e)) += 1 }
+      groups
+    }
   }
 
   /** Connected components by min-label flooding to a fixpoint — the

@@ -131,32 +131,32 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
 
   /** Chunked out-adjacency — GraphChi's out-edge shard shape
     * (`src/engine/auxdata/`): each source's out-edges split by `dst`
-    * residue into `odeg / AdjacencyChunk + 1` chunks, one row per
-    * (src, chunk) with `nbrs = collect_list(item)` over the chunk's edges
-    * and the source's full out-degree `odeg`, hash-partitioned and sorted
-    * on `src`. A superstep joins these ~|V| rows to the source state and
-    * explodes `nbrs` inside the task instead of joining |E| edge rows;
-    * the chunking keeps a power-law hub's out-list out of one row.
-    * `item` is evaluated over the edge row.
+    * residue into `odeg / AdjacencyChunk + 1` chunks (`odeg` the source's
+    * out-degree, counted over a window in the same pass over `edges`),
+    * one row per (src, chunk) with `nbrs = collect_list(item)` over the
+    * chunk's edges, hash-partitioned and sorted on `src`. A [[Pregel]]
+    * superstep joins these ~|V| rows to the source state and explodes
+    * `nbrs` inside the task instead of joining |E| edge rows; the
+    * chunking keeps a power-law hub's out-list out of one row. `item` is
+    * evaluated over the edge row.
     */
-  def chunkedOutAdjacency(item: Column): DataFrame = {
-    val odeg = edges.groupBy("src").agg(count(lit(1)).as("__odeg"))
-    edges.join(odeg, "src")
+  def chunkedOutAdjacency(item: Column): DataFrame =
+    edges.withColumn("__odeg", count(lit(1)).over(Window.partitionBy("src")))
       .groupBy(col("src"),
         pmod(col("dst"), (col("__odeg") / AdjacencyChunk).cast("long") + 1).as("__chunk"))
-      .agg(collect_list(item).as("nbrs"), first(col("__odeg")).as("odeg"))
+      .agg(collect_list(item).as("nbrs"))
       .repartition(col("src")).sortWithinPartitions("src")
-      .select("src", "nbrs", "odeg")
-  }
+      .select("src", "nbrs")
 }
 
 object PropertyGraph {
   /** Chunk size of [[chunkedOutAdjacency]]: a source's chunks average at
-    * most this many out-edges. 16384 keeps the widest payload — Pregel's
-    * edge-attribute structs, ~32 bytes per (dst, weight) edge against
-    * PageRank's bare 8-byte ids — near half a MB per row; a hub pays one
-    * extra adjacency row per 16384 out-edges, noise next to the ~|V|
-    * rows a superstep joins.
+    * most this many out-edges. 16384 keeps a row of Pregel's
+    * edge-attribute structs, ~32 bytes per (dst, weight) edge, near half
+    * a MB; a hub pays one extra adjacency row per 16384 out-edges, noise
+    * next to the ~|V| rows a superstep joins. PageRank does not use the
+    * adjacency: it runs on its own dense arrays (see
+    * [[Algorithms.pageRank]]).
     */
   val AdjacencyChunk = 16384
 

@@ -8,6 +8,45 @@ class AlgorithmsSpec extends SparkSpec {
 
   private def edges(pairs: (Long, Long)*) = pairs.toDF("src", "dst")
 
+  private def ranks(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  /** PageRank over plain arrays with the rules of [[Algorithms.pageRank]]:
+    * duplicate edges and self-loops count, and a vertex without
+    * out-edges emits nothing.
+    */
+  private def arrayPageRank(pairs: Seq[(Long, Long)], iterations: Int): Map[Long, Double] = {
+    val ids = pairs.flatMap { case (s, d) => Seq(s, d) }.distinct
+    val ix = ids.zipWithIndex.toMap
+    val odeg = new Array[Int](ids.length)
+    pairs.foreach { case (s, _) => odeg(ix(s)) += 1 }
+    var pr = Array.fill(ids.length)(1.0)
+    for (_ <- 1 to iterations) {
+      val sum = new Array[Double](ids.length)
+      pairs.foreach { case (s, d) => sum(ix(d)) += pr(ix(s)) / odeg(ix(s)) }
+      pr = sum.map(0.15 + 0.85 * _)
+    }
+    ids.zip(pr).toMap
+  }
+
+  test("pageRank matches a plain-array PageRank on duplicates, self-loops, dangling vertices and extreme ids") {
+    val rnd = new scala.util.Random(5)
+    val pool = Seq(Long.MinValue, Long.MinValue + 1, -7L, -1L, 0L, 1L, 2L, 3L, 40L,
+      Long.MaxValue - 2, Long.MaxValue - 1, Long.MaxValue)
+    val pairs = Seq.fill(80)((pool(rnd.nextInt(pool.size)), pool(rnd.nextInt(pool.size)))) ++
+      Seq(5L -> 6L, 5L -> 6L, 5L -> 6L, 5L -> 7L, // duplicates
+        6L -> 6L, 7L -> 7L, 7L -> 5L,               // self-loops
+        -9L -> 5L, 8L -> Long.MaxValue,             // pure sources
+        5L -> 100L, Long.MaxValue - 1 -> 101L)      // dangling vertices
+    for (iters <- Seq(1, 4, 60)) {
+      val want = arrayPageRank(pairs, iters)
+      val got = ranks(Algorithms.pageRank(edges(pairs: _*), iterations = iters))
+      assert(got.keySet == want.keySet, s"iterations=$iters")
+      for ((v, x) <- want)
+        assert(math.abs(got(v) - x) <= 1e-9 * x, s"iterations=$iters vertex $v: ${got(v)} vs $x")
+    }
+  }
+
   test("pageRank: cycle converges to uniform ranks") {
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L)
     val pr = Algorithms.pageRank(e, iterations = 10).collect()
@@ -79,7 +118,7 @@ class AlgorithmsSpec extends SparkSpec {
     assert(identLog.isEmpty)
   }
 
-  test("CC, SCC, LPA and 2-core results do not depend on shuffle partitions") {
+  test("CC, SCC, LPA, 2-core and PageRank results do not depend on shuffle partitions") {
     val rnd = new scala.util.Random(11)
     val pairs = Seq.fill(260)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong)) ++
       (300L until 320L).map(i => i -> (i + 1)) // a path: a long tail of supersteps
@@ -96,15 +135,24 @@ class AlgorithmsSpec extends SparkSpec {
           log.orderBy("iter").collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq,
           labels(Contraction.stronglyConnectedComponents(e)),
           labels(Algorithms.labelPropagation(e)),
-          Algorithms.kCore(e, 2).collect().map(_.getLong(0)).toSet)
+          Algorithms.kCore(e, 2).collect().map(_.getLong(0)).toSet,
+          ranks(Algorithms.pageRank(e, iterations = 10)),
+          ranks(Algorithms.pageRank(e, iterations = 10)))
       } finally spark.conf.set(key, saved)
     }
+    def bits(pr: Map[Long, Double]) = pr.map { case (v, x) => v -> java.lang.Double.doubleToRawLongBits(x) }
     val base = results(1)
     assert(base._1 == labels(Algorithms.unionFindConnectedComponents(e)))
     assert(base._2.length >= 20)
     assert(base._5.nonEmpty && !base._5.contains(320L))
+    assert(bits(base._7) == bits(base._6), "PageRank differs between two runs at 1 partition")
     for (parts <- Seq(7, 200)) {
       val got = results(parts)
+      assert(bits(got._7) == bits(got._6), s"PageRank differs between two runs at $parts partitions")
+      assert(got._6.keySet == base._6.keySet, s"PageRank vertex set differs at $parts partitions")
+      for ((v, x) <- got._6)
+        assert(math.abs(x - base._6(v)) <= 1e-12 * base._6(v),
+          s"PageRank of $v differs at $parts partitions: $x vs ${base._6(v)}")
       assert(got._1 == base._1, s"CC labels differ at $parts partitions")
       assert(got._2 == base._2, s"CC delta log differs at $parts partitions")
       assert(got._3 == base._3, s"SCC labels differ at $parts partitions")
@@ -255,9 +303,10 @@ class AlgorithmsSpec extends SparkSpec {
 
   // Shape specs for the shared graph preparation in PropertyGraph.
 
-  test("pageRank: hub with chunk-1, chunk and chunk+1 out-edges matches the closed form and Pregel") {
-    // bidirectional star: hub 0 <-> leaves 1..n, so the hub's out-list
-    // straddles the adjacency chunk boundary. From pr = 1 everywhere,
+  test("pageRank and Functional.bulkSync match the closed form on a hub with chunk-1, chunk and chunk+1 out-edges") {
+    // bidirectional star: hub 0 <-> leaves 1..n. The hub's 16k out-edges
+    // sit in one pageRank partition, and its out-list straddles the
+    // adjacency chunk boundary of Functional.bulkSync. From pr = 1 everywhere,
     // leaf' = 0.15 + 0.85·hub/n and hub' = 0.15 + 0.85·n·leaf.
     val iters = 3
     for (n <- Seq(PropertyGraph.AdjacencyChunk - 1, PropertyGraph.AdjacencyChunk,
