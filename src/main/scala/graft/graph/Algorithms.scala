@@ -1,18 +1,17 @@
 package graft.graph
 
-import scala.collection.mutable.ArrayBuilder
+import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
+import java.util.{Arrays, BitSet}
 
-import org.apache.spark.HashPartitioner
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructType}
 
 /** Graph algorithm library — the reference's `example_apps/` and
-  * `toolkits/graph_analytics/` programs (SURVEY.md §2.10), re-expressed as
-  * declarative DataFrame iteration. Each takes an edge DataFrame
-  * (`src`, `dst` [, props]) and returns a result DataFrame.
+  * `toolkits/graph_analytics/` programs (SURVEY.md §2.10), on
+  * [[ArrayGraph]] supersteps, [[Pregel]] or plain DataFrame plans. Each
+  * takes an edge DataFrame (`src`, `dst` [, props]) and returns a result
+  * DataFrame.
   */
 object Algorithms {
 
@@ -22,357 +21,161 @@ object Algorithms {
     * reference: a vertex with no out-edges emits nothing, and its mass is
     * dropped, not redistributed. Duplicate edges and self-loops count.
     *
-    * The superstep is the reference's in-memory multiply-add
-    * (`pagerank.cpp:121-146`) over dense arrays, partitioned as in GraphX:
-    * vertices are hash-partitioned by id into `spark.sql.shuffle.partitions`
-    * partitions, each holding its ids sorted, and a vertex's local index
-    * is its position in that order. One shuffle of edge blocks, which
-    * sends each edge to its source's and to its destination's partition,
-    * builds, once per call, a cached [[RankPart]] per partition:
-    *   - sender side: 1/outdeg per local source and, per target
-    *     partition, each edge's local source and its slot among the
-    *     distinct destinations of that (source, target) partition pair;
-    *   - receiver side: per source partition, slot → local destination.
-    * Both sides number a pair's slots by sorted destination id, so they
-    * agree without exchanging a routing table. A superstep is one narrow
-    * pass (`out(slot) += pr(s)/outdeg(s)`, one array per target
-    * partition; superstep 1 sends from pr = 1.0), one shuffle of those
-    * `Array[Double]`s, and one narrow reduce that adds them in
-    * source-partition order and sets pr = resetProb + (1 − resetProb)·sum.
-    * A vertex that receives nothing sits at resetProb. Every sum runs in
-    * a fixed order, so the ranks are bit-reproducible for a given
-    * partition count.
-    *
-    * The result is lazy: the build and every superstep run as stages of
-    * the job of the caller's action, with no Spark job, query plan or
-    * checkpoint of their own. Edges with a null endpoint are skipped;
-    * `iterations <= 0` gives the uniform init (pr = 1.0).
+    * An [[ArrayGraph]] sum over the directed graph, from pr = 1.0; a
+    * vertex that receives nothing sits at resetProb. The ranks are
+    * bit-reproducible for a given partition count. The result is lazy:
+    * the build and every superstep run as stages of the job of the
+    * caller's action, with no Spark job, query plan or checkpoint of
+    * their own. Edges with a null endpoint are skipped.
     */
   def pageRank(edges: DataFrame, iterations: Int = 4,
                resetProb: Double = 0.15): DataFrame = {
-    val spark = edges.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val byIndex = new HashPartitioner(n) // an Int key is its own partition
-    val parts = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .queryExecution.toRdd
-      .mapPartitions(RankPart.route(n, _))
-      .partitionBy(byIndex)
-      .mapPartitionsWithIndex((p, blocks) => Iterator(RankPart.build(p, n, blocks.map(_._2))))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks = parts.map(p => Array.fill(p.ids.length)(1.0))
-    for (_ <- 1 to iterations) {
-      val inbox = parts.zipPartitions(ranks)((p, pr) => p.next().send(pr.next()))
-        .partitionBy(byIndex)
-      ranks = parts.zipPartitions(inbox)(
-        (p, msgs) => Iterator(p.next().receive(msgs.map(_._2), resetProb)))
-    }
-    val rows = parts.zipPartitions(ranks) { (p, pr) =>
-      val (ids, r) = (p.next().ids, pr.next())
-      ids.indices.iterator.map(i => Row(ids(i), r(i)))
-    }
-    spark.createDataFrame(rows, StructType(Seq(
-      StructField("id", LongType, nullable = false),
-      StructField("pr", DoubleType, nullable = false))))
+    val g = ArrayGraph.directed(edges)
+    var ranks = g.parts.map(p => Array.fill(p.size)(1.0))
+    for (_ <- 1 to iterations)
+      ranks = g.superstep(ranks) { (p, pr) =>
+        // a vertex without out-edges has no slot, so its value never ships
+        (Array.tabulate(p.size)(v => doubleToRawLongBits(pr(v) / p.outDegree(v))), ArrayGraph.All)
+      } { (p, _, in) =>
+        Array.tabulate(p.size) { v =>
+          val k = in.gather(v)
+          var (sum, j) = (0.0, 0)
+          while (j < k) { sum += longBitsToDouble(in.values(j)); j += 1 }
+          resetProb + (1 - resetProb) * sum
+        }
+      }
+    g.column(ranks, "pr", DoubleType)(identity)
   }
 
-  /** One vertex partition of [[pageRank]]: `ids` sorted, `w` = 1/outdeg
-    * per local vertex (0 without out-edges); per target partition q,
-    * `sendSrc(q)`/`sendSlot(q)` give each edge's local source and slot,
-    * ordered by (slot, source); per source partition p, `recv(p)` maps
-    * slot → local destination.
-    */
-  private final class RankPart(val index: Int, val ids: Array[Long], w: Array[Double],
-      sendSrc: Array[Array[Int]], sendSlot: Array[Array[Int]],
-      recv: Array[Array[Int]]) extends Serializable {
-
-    /** (target partition, (this partition, per-slot sums of pr/outdeg)). */
-    def send(pr: Array[Double]): Iterator[(Int, (Int, Array[Double]))] = {
-      val c = new Array[Double](ids.length)
-      var i = 0
-      while (i < c.length) { c(i) = w(i) * pr(i); i += 1 }
-      sendSlot.indices.iterator.filter(sendSlot(_).nonEmpty).map { q =>
-        val (src, slot) = (sendSrc(q), sendSlot(q))
-        val out = new Array[Double](slot.last + 1)
-        var e = 0
-        while (e < src.length) { out(slot(e)) += c(src(e)); e += 1 }
-        (q, (index, out))
-      }
-    }
-
-    /** The next ranks from the (source partition, sums) this partition got. */
-    def receive(msgs: Iterator[(Int, Array[Double])], resetProb: Double): Array[Double] = {
-      val from = new Array[Array[Double]](recv.length)
-      msgs.foreach { case (p, m) => from(p) = m }
-      val sum = new Array[Double](ids.length)
-      for (p <- from.indices if from(p) != null) {
-        val (m, to) = (from(p), recv(p))
-        var k = 0
-        while (k < m.length) { sum(to(k)) += m(k); k += 1 }
-      }
-      var i = 0
-      while (i < sum.length) { sum(i) = resetProb + (1 - resetProb) * sum(i); i += 1 }
-      sum
-    }
-  }
-
-  private object RankPart {
-    /** A vertex id's partition, after a 64-bit mix so that strided ids spread. */
-    def partOf(id: Long, n: Int): Int =
-      Math.floorMod(java.lang.Long.hashCode(scala.util.hashing.byteswap64(id)), n)
-
-    /** Pairs per edge block of [[route]]. */
-    private val Block = 4096
-
-    /** The edge rows of one input partition as blocks keyed by vertex
-      * partition: each edge goes to its source's partition as an out-edge
-      * (src, dst) and to its destination's as an in-edge (dst, src),
-      * interleaved into `Array[Long]`s of at most [[Block]] pairs, flagged
-      * `true` for in-edges. Rows with a null endpoint are skipped.
-      */
-    def route(n: Int, rows: Iterator[InternalRow]): Iterator[(Int, (Boolean, Array[Long]))] = {
-      val bufs = Array.fill(2 * n)(new ArrayBuilder.ofLong) // 2p: out-edges of p, 2p + 1: in-edges
-      def take(b: Int) = { val a = bufs(b).result(); bufs(b).clear(); (b / 2, (b % 2 == 1, a)) }
-      rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).flatMap { r =>
-        val (s, d) = (r.getLong(0), r.getLong(1))
-        val (o, i) = (2 * partOf(s, n), 2 * partOf(d, n) + 1)
-        bufs(o).addOne(s).addOne(d)
-        bufs(i).addOne(d).addOne(s)
-        if (bufs(o).length < 2 * Block && bufs(i).length < 2 * Block) Iterator.empty
-        else Iterator(o, i).filter(bufs(_).length >= 2 * Block).map(take)
-      } ++ bufs.indices.iterator.filter(bufs(_).length > 0).map(take)
-    }
-
-    /** Partition `index`'s arrays from its [[route]] blocks. */
-    def build(index: Int, n: Int, blocks: Iterator[(Boolean, Array[Long])]): RankPart = {
-      val (oSrc, oDst, iDst, iSrc) = unzip(blocks)
-      val ids = sortedDistinct(Array.concat(oSrc, iDst))
-      val oLoc = localIndex(ids, oSrc)
-      val deg = new Array[Int](ids.length)
-      oLoc.foreach(s => deg(s) += 1)
-      val w = deg.map(d => if (d == 0) 0.0 else 1.0 / d)
-      // sender: out-edges by target partition, a slot per distinct dst
-      val byTarget = groupByPart(oDst, n)
-      val sendSrc, sendSlot = new Array[Array[Int]](n)
-      for (q <- 0 until n) {
-        val es = byTarget(q)
-        val dsts = sortedDistinct(es.map(e => oDst(e)))
-        val keyed = es.map(e =>
-          (java.util.Arrays.binarySearch(dsts, oDst(e)).toLong << 32) | oLoc(e))
-        java.util.Arrays.sort(keyed)
-        sendSlot(q) = keyed.map(k => (k >>> 32).toInt)
-        sendSrc(q) = keyed.map(_.toInt)
-      }
-      // receiver: in-edges by source partition, slots numbered alike
-      val bySource = groupByPart(iSrc, n)
-      val recv = Array.tabulate(n)(p =>
-        localIndex(ids, sortedDistinct(bySource(p).map(e => iDst(e)))))
-      new RankPart(index, ids, w, sendSrc, sendSlot, recv)
-    }
-
-    /** (out-edge src, out-edge dst, in-edge dst, in-edge src) of the blocks. */
-    private def unzip(blocks: Iterator[(Boolean, Array[Long])]) = {
-      val (oSrc, oDst, iDst, iSrc) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong,
-        new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
-      blocks.foreach { case (in, pairs) =>
-        val (a, b) = if (in) (iDst, iSrc) else (oSrc, oDst)
-        var k = 0
-        while (k < pairs.length) { a.addOne(pairs(k)); b.addOne(pairs(k + 1)); k += 2 }
-      }
-      (oSrc.result(), oDst.result(), iDst.result(), iSrc.result())
-    }
-
-    /** Sorts `xs` in place and returns its distinct values. */
-    private def sortedDistinct(xs: Array[Long]): Array[Long] = {
-      java.util.Arrays.sort(xs)
-      var k = 0
-      for (i <- xs.indices if i == 0 || xs(i) != xs(i - 1)) { xs(k) = xs(i); k += 1 }
-      java.util.Arrays.copyOf(xs, k)
-    }
-
-    private def localIndex(ids: Array[Long], xs: Array[Long]): Array[Int] =
-      xs.map(x => java.util.Arrays.binarySearch(ids, x))
-
-    /** Indices of `keys`, grouped by the partition of each key. */
-    private def groupByPart(keys: Array[Long], n: Int): Array[Array[Int]] = {
-      val part = keys.map(partOf(_, n))
-      val size = new Array[Int](n)
-      part.foreach(q => size(q) += 1)
-      val groups = size.map(new Array[Int](_))
-      val fill = new Array[Int](n)
-      for (e <- part.indices) { groups(part(e))(fill(part(e))) = e; fill(part(e)) += 1 }
-      groups
-    }
-  }
-
-  /** Connected components by min-label flooding to a fixpoint — the
-    * reference's `example_apps/connectedcomponents.cpp:79-138`: a
-    * [[Pregel]] `activeOnly` run, so only vertices whose label changed
-    * send, and it converges when no label changes, mirroring the
-    * reference's scheduler-driven termination
-    * (`graphchi_engine.hpp:802-810`).
+  /** Connected components by min-label flooding to a fixpoint: the
+    * labels of [[connectedComponentsWithDeltaLog]].
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame =
     connectedComponentsWithDeltaLog(edges, maxIter)._1
 
-  /** Connected components plus the reference's per-iteration delta log
-    * (`src/engine/graphchi_engine.hpp:593-599`: iter, nupdates, work) —
-    * here (iter, nupdates) with nupdates = labels changed that round,
-    * one row per superstep that changed a label. The counts are the
-    * runner's per-superstep changed counts (one tiny row per superstep
-    * on the driver, same as the reference's CSV).
+  /** Connected components by min-label flooding to a fixpoint — the
+    * reference's `example_apps/connectedcomponents.cpp:79-138`: an
+    * [[ArrayGraph]] min over the undirected graph with the reference's
+    * selective scheduling (`bitset_scheduler.hpp:38-96`). Every vertex
+    * sends in superstep 1, afterwards only those whose label changed (a
+    * partition pair with none ships nothing), and the run stops when no
+    * label changes (`graphchi_engine.hpp:802-810`). Also returns the
+    * reference's delta log (`graphchi_engine.hpp:593-599`) as (iter,
+    * nupdates): the labels changed in each superstep that changed one,
+    * from the supersteps' collected counts.
     */
   def connectedComponentsWithDeltaLog(edges: DataFrame,
                                       maxIter: Int = 50): (DataFrame, DataFrame) = {
-    // materialized once: the vertex set and the runner's adjacency are
-    // both built from it without re-reading `edges`
-    val sym = PropertyGraph.fromEdges(edges).symmetrize.edges
-      .transform(graft.graph.Iterate.ckpt)
-    // symmetric: every vertex is a source
-    val (comp, changed) = Pregel.run(sym.select(col("src").as("id")).distinct(), sym,
-      initial = Map("component" -> col("id")),
-      sendMsg = col("src_component"),
-      aggMsg = min(col("msg")),
-      update = Map("component" -> least(col("component"), col("msg"))),
-      maxIter = maxIter, activeOnly = true)
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val log = changed.takeWhile(_ > 0).zipWithIndex.map { case (n, i) => (i + 1, n) }
-    (comp, log.toDF("iter", "nupdates"))
+    val g = ArrayGraph.undirected(edges)
+    // (labels, the vertices whose label changed in the last superstep)
+    val init = g.parts.map { p => val all = new BitSet(p.size); all.set(0, p.size); (p.ids.clone(), all) }
+    val (state, changed) = g.converge(init, maxIter)(_._2.cardinality.toLong) {
+      g.superstep(_) { case (_, (label, moved)) => (label, moved.get _) } { case (_, (label, _), in) =>
+        val (next, moved) = (label.clone(), new BitSet(label.length))
+        for (v <- next.indices) {
+          for (j <- 0 until in.gather(v)) next(v) = math.min(next(v), in.values(j))
+          if (next(v) != label(v)) moved.set(v)
+        }
+        (next, moved)
+      }
+    }
+    val log = changed.takeWhile(_ > 0).zipWithIndex.map { case (n, i) => Row(i + 1, n) }
+    // rows and a schema derive no encoder by reflection; one partition, so sorting plans no exchange
+    (g.column(state, "component", LongType)(_._1), edges.sparkSession.createDataFrame(Arrays.asList(log: _*),
+      new StructType().add("iter", IntegerType, false).add("nupdates", LongType, false)).coalesce(1))
   }
 
   /** Community detection by label propagation (most-frequent neighbor
     * label, larger label wins ties) — the reference's
     * `example_apps/communitydetection.cpp:100-171` (tie-break `:150-153`):
-    * a [[Pregel]] run in which every vertex sends its label each
-    * superstep. Synchronous variant; fixed iteration budget like the
-    * reference's default.
+    * an [[ArrayGraph]] mode over the undirected graph, every vertex
+    * sending its label each superstep. Synchronous variant; fixed
+    * iteration budget like the reference's default. Lazy, like
+    * [[pageRank]].
     */
   def labelPropagation(edges: DataFrame, iterations: Int = 5): DataFrame = {
-    val sym = PropertyGraph.fromEdges(edges).symmetrize.edges
-      .transform(graft.graph.Iterate.ckpt)
-    // symmetric: every vertex is a source
-    Pregel.run(sym.select(col("src").as("id")).distinct(), sym,
-      initial = Map("label" -> col("id")),
-      sendMsg = col("src_label"),
-      // the most frequent label, the larger on ties: `mode` breaks ties
-      // to the smallest value, and bitwise_not reverses the order
-      // without overflowing at Long.MinValue
-      aggMsg = bitwise_not(mode(bitwise_not(col("msg")), deterministic = true)),
-      update = Map("label" -> coalesce(col("msg"), col("label"))),
-      maxIter = iterations)._1
+    val g = ArrayGraph.undirected(edges)
+    var labels = g.parts.map(_.ids.clone())
+    for (_ <- 1 to iterations)
+      labels = g.superstep(labels)((_, label) => (label, ArrayGraph.All)) { (p, label, in) =>
+        Array.tabulate(p.size) { v =>
+          val k = in.gather(v)
+          Arrays.sort(in.values, 0, k)
+          // the longest run of equal labels, the later (larger) on ties
+          var (best, bestRun, run) = (label(v), 0, 0)
+          for (j <- 0 until k) {
+            run = if (j > 0 && in.values(j) == in.values(j - 1)) run + 1 else 1
+            if (run >= bestRun) { best = in.values(j); bestRun = run }
+          }
+          best
+        }
+      }
+    g.column(labels, "label", LongType)(identity)
   }
 
   /** k-core decomposition by iterative peeling for a given k — the
-    * reference's `toolkits/graph_analytics/kcores.cpp:81-142`: a
-    * [[Pregel]] `activeOnly` run in which a vertex whose live degree
-    * drops below k deactivates and tells each neighbour once, and the
-    * neighbour lowers its live degree. Returns the vertices that
-    * survive in the k-core.
+    * reference's `toolkits/graph_analytics/kcores.cpp:81-142`: an
+    * [[ArrayGraph]] count over the undirected graph without self-loops.
+    * A vertex whose live degree drops below k dies and, in the next
+    * superstep, tells each neighbour once, which lowers its live degree.
+    * Returns the vertices that survive in the k-core.
     *
     * The initial state already removes the vertices of degree < k, so a
     * run cut by `maxIter` has applied `maxIter + 1` peel rounds; the run
-    * stops early at the first superstep that changes no vertex.
+    * stops early at the first superstep in which no vertex dies.
     */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    val sym = PropertyGraph.fromEdges(edges).withoutSelfEdges.symmetrize.edges
-      .transform(graft.graph.Iterate.ckpt)
-    val (deg, below) = graft.graph.Iterate.ckptSum(
-      sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("d"))
-        .withColumn("below", (col("d") < k).cast("long")),
-      "below")
-    // only a vertex below k ever sends; with none the graph is its own
-    // k-core, and the run and its adjacency build are skipped
-    if (below == 0L) return deg.select("id")
-    val (state, _) = Pregel.run(deg, sym,
-      initial = Map("alive" -> (col("d") >= k), "deg" -> col("d")),
-      sendMsg = when(!col("src_alive"), 1L),
-      aggMsg = sum(col("msg")),
-      update = Map(
-        "alive" -> (col("alive") && col("deg") - col("msg") >= k),
-        "deg" -> when(col("alive"), col("deg") - col("msg")).otherwise(col("deg"))),
-      maxIter = maxIter, activeOnly = true)
-    state.filter(col("alive")).select("id")
+    val g = ArrayGraph.undirected(PropertyGraph.fromEdges(edges).withoutSelfEdges.edges)
+    // (live degree, the vertices that died in the last superstep); a
+    // vertex is alive while its live degree is at least k
+    val init = g.parts.map { p =>
+      val (live, died) = (Array.tabulate(p.size)(p.inDegree), new BitSet(p.size))
+      for (v <- live.indices if live(v) < k) died.set(v)
+      (live, died)
+    }
+    val (state, _) = g.converge(init, maxIter)(_._2.cardinality.toLong) {
+      g.superstep(_) { case (p, (_, died)) =>
+        (Array.tabulate(p.size)(v => if (died.get(v)) 1L else 0L), died.get _)
+      } { case (p, (live, _), in) =>
+        val (next, died) = (live.clone(), new BitSet(p.size))
+        for (v <- next.indices) {
+          for (j <- 0 until in.gather(v)) next(v) -= in.values(j).toInt
+          if (live(v) >= k && next(v) < k) died.set(v)
+        }
+        (next, died)
+      }
+    }
+    g.column(state, "live", IntegerType)(_._1).filter(col("live") >= k).select("id")
   }
 
   /** Per-vertex core number — the full decomposition the reference's
-    * `toolkits/graph_analytics/kcores.cpp:81-142,208-223` emits: each
-    * vertex's `kcore` is the peel round (the k) at which it was removed,
-    * which equals the standard coreness (v is removed in round k iff it
-    * belongs to the k-core but not the (k+1)-core).
-    *
-    * Spark shape: instead of mirroring the reference's nested
-    * peel-to-fixpoint-per-k driver loop (data-dependent round count,
-    * each round touching the shrinking remainder), this runs the
-    * h-index fixpoint [Lü et al., Nature Communications 7:10168 (2016)]:
-    * start from degree, repeatedly replace each label with the H-index
-    * of its neighbors' labels; the fixpoint is exactly the coreness.
-    * Every superstep is one uniform join + window-aggregate over the
-    * full edge set — no shrinking actives needed, extra supersteps past
-    * convergence are no-ops, and the round count is small in practice
-    * (monotone non-increasing labels bounded below by coreness).
-    * Vertices are those incident to ≥1 edge (as in the reference, where
-    * the vertex set comes from the edge file).
+    * `toolkits/graph_analytics/kcores.cpp:81-142,208-223` emits — as the
+    * h-index fixpoint [Lü et al., Nature Communications 7:10168 (2016)]
+    * instead of the reference's peel-to-fixpoint-per-k loop: an
+    * [[ArrayGraph]] fold over the undirected graph without self-loops
+    * that starts from degree and replaces each label with the h-index of
+    * its neighbours' labels; the fixpoint is exactly the coreness. Labels
+    * never increase, so `iterations` is a cap: the run stops at the first
+    * round that changes no label, bit-identical to the full unroll, and a
+    * run cut unconverged leaves a valid upper bound. Vertices are those
+    * incident to ≥1 edge, as in the reference.
     */
   def coreness(edges: DataFrame, iterations: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sym = PropertyGraph.fromEdges(edges).withoutSelfEdges.symmetrize.edges
-      .repartition(col("dst"))
-      .transform(graft.graph.Iterate.ckpt)
-    // r16 (guide §2 job cadence): the initial label sum rides the same
-    // checkpoint job; each round's convergence test compares label sums
-    // (see below) instead of running a separate moved-count action.
-    var (lab, labSum) = graft.graph.Iterate.ckptSum(
-      sym.groupBy("src").agg(count(lit(1)).as("c"))
-        .select(col("src").as("id"), col("c")),
-      "c")
-    // `iterations` is a cap, not an unroll: each round checks whether any
-    // label moved and stops at the fixpoint (labels are monotone
-    // non-increasing, so once a round is a no-op every later round is
-    // too — a capped run that converges early is bit-identical to the
-    // full unroll). Hitting the cap unconverged means the result is a
-    // (valid upper-bound) approximation; callers needing certainty raise
-    // the cap.
-    var it = 0
-    var converged = false
-    while (it < iterations && !converged) {
-      // H-index of the neighbor multiset: sort labels desc, take
-      // max(min(label, position)) — h neighbors with label ≥ h.
-      val nbr = sym.join(lab.select(col("id").as("dst"), col("c").as("nc")), "dst")
-        .select(col("src"), col("nc"))
-      // r16 (guide §2.3 aggregate before you shuffle): the h-index needs
-      // only the per-(src, nc) multiplicity, not every neighbor row —
-      // pre-aggregate counts (map-side partials collapse duplicate
-      // labels) and run the per-src window over DISTINCT labels. With
-      // labels sorted desc and cum = Σ counts so far (= #neighbors with
-      // label ≥ nc), max(min(nc, row_number)) over all rows equals
-      // max(min(nc, cum)) over distinct labels: within one equal-label
-      // run min(nc, rn) is maximal at the run's last row, where rn = cum.
-      // Exact same h, smaller sort, no window ties (keys distinct).
-      val hist = nbr.groupBy("src", "nc").agg(count(lit(1)).as("m"))
-      val w = Window.partitionBy("src").orderBy(desc("nc"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      // Convergence folded into the round's ONE materializing job (r16,
-      // guide §2 job cadence; supersedes the r9 shape, which still ran a
-      // separate moved-count aggregate per round and joined the previous
-      // labels just to compute `moved`): labels are monotone
-      // non-increasing under the h-index operator (H(f) ≤ f pointwise
-      // when f started at degree, and H is monotone — the same property
-      // the early-stop equivalence argument above already relies on),
-      // so "no label moved" ⟺ "Σc is unchanged" — exact long arithmetic,
-      // no increase can mask a decrease. The sum rides the checkpoint's
-      // materializing pass: one job per round, no prev-join, and the
-      // materialized rows shrink to (id, c).
-      val (staged, newSum) = graft.graph.Iterate.ckptSum(
-        hist.withColumn("cum", sum("m").over(w))
-          .groupBy("src").agg(max(least(col("nc"), col("cum"))).as("c"))
-          .select(col("src").as("id"), col("c")),
-        "c")
-      converged = newSum == labSum
-      labSum = newSum
-      lab = staged
-      it += 1
+    val g = ArrayGraph.undirected(PropertyGraph.fromEdges(edges).withoutSelfEdges.edges)
+    // (labels, how many changed in the last round)
+    val init = g.parts.map(p => (Array.tabulate(p.size)(p.inDegree(_).toLong), 0L))
+    val (state, _) = g.converge(init, iterations)(_._2) {
+      g.superstep(_) { case (_, (label, _)) => (label, ArrayGraph.All) } { case (p, (label, _), in) =>
+        val next = Array.tabulate(p.size) { v =>
+          // the largest h with h in-labels >= h
+          val k = in.gather(v)
+          Arrays.sort(in.values, 0, k)
+          (0 until k).foldLeft(0L)((h, j) => math.max(h, math.min(in.values(j), (k - j).toLong)))
+        }
+        (next, next.indices.count(v => next(v) != label(v)).toLong)
+      }
     }
-    lab
+    g.column(state, "c", LongType)(_._1)
   }
 
   /** Shared triangle prep: degree-ordered orientation + per-edge sorted
@@ -427,14 +230,9 @@ object Algorithms {
   def triangleCounts(edges: DataFrame): DataFrame = {
     val (withAdj, mapping) = triangleEdgeAdj(edges)
     // Edge (u,v) closes one triangle per common out-neighbor w: u and v
-    // each gain |∩|, every w gains 1. Rows: 2|E| + #triangles — not the
-    // 3-per-wedge explode of the join formulation. The three corner
-    // contributions come out of ONE pass over the intersect rows (a
-    // per-row concat + explode), NOT a 3-branch union: union branches
-    // each re-evaluate their (uncached) input subtree, so the union
-    // formulation executed the adjacency joins + intersect kernel
-    // THREE times per query (visible as triplicated SortMergeJoins in
-    // the final plan).
+    // each gain |∩|, every w gains 1, in ONE pass over the intersect
+    // rows (concat + explode). A 3-branch union would evaluate the
+    // adjacency joins and the intersect kernel once per branch.
     val inter = withAdj.select(col("u"), col("v"),
       graft.functions.SortedIntersect.of(col("nu"), col("nv")).as("ws"))
     val c = size(col("ws")).cast("long")
@@ -524,8 +322,7 @@ object Algorithms {
     val oneHot = (l: Column) => transform(sequence(lit(0), lit(numLabels - 1)),
       i => when(i === l, 1.0d).otherwise(0.0d))
     val uniform = array_repeat(lit(1.0d / numLabels), numLabels)
-    // r15: native VecScale for the per-edge weighted copy and the
-    // per-vertex renormalize (interpreted HOFs before; bit-exact)
+    // native VecScale for the per-edge weighted copy and the renormalize
     val avg = graft.functions.VecMath.scaleDiv(col("msg.sumd"), col("msg.sw"))
     val (state, _) = Pregel.run(verts, e,
       initial = Map("fixed" -> col("__seed").isNotNull,

@@ -23,20 +23,12 @@ object Contraction {
     val spark = edges.sparkSession
     var e = PropertyGraph.fromEdges(edges.select("src", "dst")).withoutSelfEdges.edges
       .distinct().transform(graft.graph.Iterate.ckpt)
-    // r16 (guide §2 job cadence): every convergence/progress count in
-    // the phase machinery is harvested from its frame's checkpoint
-    // materialization (Iterate.ckptN/ckptSum) instead of a separate
-    // count()/isEmpty action — the `live` tally below is maintained
-    // from those counts, so no standalone job re-scans `remaining`
-    // between phases.
+    // every count below comes from its frame's checkpoint job
+    // (Iterate.ckptN), not from a count() action of its own
     var (remaining, live) =
       graft.graph.Iterate.ckptN(PropertyGraph.fromEdges(e).vertices)
-    // r16: assigned SCCs accumulate as LAZY projections over frames the
-    // loop already materializes (each `single` is checkpointed, each
-    // `reached` filters the confirm run's final checkpoint), with one
-    // union at the end — the previous shape
-    // re-checkpointed the monotonically growing `assigned` union every
-    // trim round and every phase (guide §1.2 don't recompute).
+    // assigned SCCs: lazy projections over frames the loop already
+    // checkpoints, unioned once at the end
     var assignedParts = Vector.empty[DataFrame]
 
     var phase = 0
@@ -47,9 +39,7 @@ object Contraction {
       while (trimmed) {
         val haveIn = e.select(col("dst").as("id")).distinct()
         val haveOut = e.select(col("src").as("id")).distinct()
-        // `both` is consumed exactly once (the anti-join below) — it
-        // executes inside single's materialization; checkpointing it
-        // bought nothing but one more blocking job per trim round (r16)
+        // `both` is read once, inside single's checkpoint
         val both = haveIn.join(haveOut, "id")
         val (single, nSingle) = graft.graph.Iterate.ckptN(
           remaining.join(both, Seq("id"), "left_anti"))
@@ -141,28 +131,16 @@ object Contraction {
       .transform(graft.graph.Iterate.ckpt)
     var comp = PropertyGraph.fromEdges(e).vertices
       .withColumn("comp", col("id")).transform(graft.graph.Iterate.ckpt)
-    // r16 (guide §1.2 / VERDICT #5 job cadence): the forest is no longer
-    // union+checkpointed per round — each round's minEdge frame is
-    // already materialized, so we keep lazy projections over those
-    // checkpoints and run ONE union + groupBy at the end. Same rows into
-    // the same final (src, dst) min-weight aggregate (the per-round
-    // .distinct() only collapsed duplicates the final groupBy collapses
-    // anyway), one fewer materialization job per Borůvka round.
+    // the forest: lazy projections over each round's checkpointed
+    // minEdge, unioned and reduced to (src, dst) min weight once at the end
     var forestParts = Vector.empty[DataFrame]
     var round = 0
     var done = false
     while (!done && round < maxRounds) {
-      // r16 (guide §2.4 remove shuffles / §1.2 don't-recompute): the
-      // cross-component edge frame `ec` is no longer checkpointed and
-      // emptiness-probed separately — both candidate orientations come
-      // from ONE explode (the union form instantiated the flood join
-      // subtree twice in the minEdge plan), the flood join executes
-      // lazily INSIDE the minEdge materialization, and the round's
-      // done-check reads isEmpty off the materialized minEdge (empty iff
-      // ec is empty: every ec row contributes a candidate). Two fewer
-      // jobs per round; minEdge values are unchanged — min_by's total
-      // order (weight, src, dst) is row-order-independent and (src, dst)
-      // is unique within each c group.
+      // the cross-component edges `ec` run lazily inside the minEdge
+      // checkpoint, both orientations from ONE explode; minEdge is empty
+      // iff ec is, and min_by's total order (weight, src, dst) makes it
+      // independent of row order
       val ec = e
         .join(comp.select(col("id").as("src"), col("comp").as("csrc")), "src")
         .join(comp.select(col("id").as("dst"), col("comp").as("cdst")), "dst")
@@ -175,9 +153,7 @@ object Contraction {
         .select(col("x.c").as("c"), col("x.src").as("src"),
           col("x.dst").as("dst"), col("x.weight").as("weight"),
           col("x.other").as("other"))
-      // r16: the done-check count is harvested from the checkpoint
-      // materialization — the r16-batch-4 shape still paid a separate
-      // isEmpty job per round
+      // the done-check count rides the checkpoint job
       val (minEdge, nMin) = graft.graph.Iterate.ckptN(
         cand.groupBy("c")
           .agg(min_by(struct(col("src"), col("dst"), col("weight"), col("other")),
@@ -207,10 +183,7 @@ object Contraction {
           .transform(graft.graph.Iterate.ckpt)
         var jumping = true
         while (jumping) {
-          // r16: ONE job per jump superstep — the changed-count is
-          // accumulated during the checkpoint materialization
-          // (supersedes the r15 staged shape, which still ran a
-          // separate count over the blocks)
+          // one job per jump: the changed count rides the checkpoint
           val (jumped, changed) = graft.graph.Iterate.ckptSum(
             parent.as("x")
               .join(parent.select(col("c").as("pc"), col("p").as("pp")),

@@ -7,10 +7,11 @@ import org.apache.spark.sql.functions._
   * replacement for the reference's engine loop
   * (`src/engine/graphchi_engine.hpp:718-992`) and its GAS / functional
   * APIs (`src/api/graphlab2_1_GAS_api/graphchi_graphlabv2_1.hpp:42-67`,
-  * `src/api/functional/functional_api.hpp:55-137`). Connected
-  * components, label propagation (plain and seeded), k-core peeling,
-  * SCC's forward colour flood and backward confirm, and the GAS /
-  * functional facades all run on it.
+  * `src/api/functional/functional_api.hpp:55-137`) for programs given
+  * as Column expressions: SCC's forward colour flood and backward
+  * confirm, seeded label propagation, and the GAS / functional facades
+  * run on it. PageRank, connected components, k-core, coreness and
+  * plain label propagation run on [[ArrayGraph]] instead.
   *
   * Semantics: bulk-synchronous. The reference defaults to asynchronous
   * updates (`README.md:30`); fixpoints agree, iteration counts may not
@@ -19,32 +20,23 @@ import org.apache.spark.sql.functions._
   * vertex sends only in the superstep after its state changed, and the
   * loop stops at the first superstep that changes nothing.
   *
-  * Execution shape per superstep (all declarative, Catalyst-planned):
-  * edges are grouped ONCE into chunked out-adjacency rows — GraphChi's
-  * own out-edge-shard storage shape (`src/engine/auxdata/`); each
-  * superstep joins RANK rows (~|V| adjacency rows) instead of |E| edge
-  * rows, explodes the chunk inside the task, evaluates `sendMsg` on the
-  * restored (edge ⋈ src-state) row, and aggregates:
+  * Execution shape per superstep (all Catalyst-planned): edges are
+  * grouped ONCE into chunked out-adjacency rows — GraphChi's out-edge
+  * shard shape (`src/engine/auxdata/`), about
+  * [[PropertyGraph.AdjacencyChunk]] edges per row — and each superstep
+  * joins those ~|V| rows to the senders, explodes the chunk in-task,
+  * evaluates `sendMsg`, and aggregates per receiver (one shuffle):
   *   messages  = adj ⋈ senders ON src → explode(chunk) → sendMsg
-  *   inbox     = messages.groupBy(dst).agg(aggMsg)      (one shuffle)
+  *   inbox     = messages.groupBy(dst).agg(aggMsg)
   *   vertices' = vertices LEFT JOIN inbox  →  update columns
-  * Chunking splits a power-law hub's out-list over several rows
-  * (about [[PropertyGraph.AdjacencyChunk]] edges each).
-  * The intended shape keeps the adjacency and vertex sides
-  * hash-partitioned on the join key across supersteps, so that a
-  * superstep runs a single exchange — the inbox aggregation. Under AQE
-  * the checkpoints report unknown partitioning (their materialized plan
-  * is adaptive), so today a superstep also re-shuffles the state, the
-  * senders and the adjacency.
-  * The adjacency is built on the first superstep, and the initial state
-  * is materialized by the first superstep's checkpoint, not by one of
-  * its own. An `activeOnly` superstep is one materialization: the new
-  * state plus a changed flag, checkpointed with the changed count
-  * summed in the same pass ([[Iterate.ckptSum]]); the next superstep's
-  * senders are that checkpoint filtered on the flag. Other runs cut
-  * lineage every `CheckpointInterval` supersteps, else the plan grows
-  * unboundedly (SURVEY.md §7.5), and once more at the end only if the
-  * last superstep was not materialized.
+  * Under AQE the checkpoints report unknown partitioning, so a superstep
+  * also re-shuffles the state, the senders and the adjacency. An
+  * `activeOnly` superstep is one checkpoint of the new state plus a
+  * changed flag, whose count is summed in the same pass
+  * ([[Iterate.ckptSum]]); the next senders are that checkpoint filtered
+  * on the flag. Other runs cut lineage every `CheckpointInterval`
+  * supersteps (SURVEY.md §7.5) and once at the end if the last superstep
+  * was not materialized.
   */
 object Pregel {
 

@@ -64,9 +64,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
   def outDegrees: DataFrame =
     edges.groupBy(col("src").as("id")).agg(count(lit(1)).as("out_degree"))
 
-  def inDegrees: DataFrame =
-    edges.groupBy(col("dst").as("id")).agg(count(lit(1)).as("in_degree"))
-
   /** Histogram of a vertex label column, descending, top `k` — the
     * reference's `analyze_labels` (`src/util/labelanalysis.hpp:67-189`).
     */
@@ -75,13 +72,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       .agg(count(lit(1)).as("cnt"))
       .orderBy(desc("cnt"), asc("label"))
       .limit(k)
-
-  /** Global top-k vertices by a value column — the reference's
-    * `get_top_vertices` (`src/util/toplist.hpp:72-153`). Spark's
-    * TakeOrdered does the chunk-sort + k-merge the reference hand-rolls.
-    */
-  def topVertices(valueCol: String, k: Int = 20): DataFrame =
-    vertices.orderBy(desc(valueCol), asc("id")).limit(k)
 
   /** Induced subgraph reachable within `hops` of `seeds` — the reference's
     * `toolkits/graph_analytics/subgraph.cpp:20-28` BFS expansion, as an
@@ -99,13 +89,6 @@ final case class PropertyGraph(vertices: DataFrame, edges: DataFrame) {
       .join(reached.withColumnRenamed("id", "dstok"), col("dst") === col("dstok"), "left_semi")
     PropertyGraph(reached, e)
   }
-
-  /** Keep each edge independently with probability p (bond percolation
-    * input step, `toolkits/graph_analytics/bond_percolation.cpp:23-29`).
-    * Seeded for deterministic tests.
-    */
-  def percolate(p: Double, seed: Long = 42L): PropertyGraph =
-    copy(edges = edges.filter(rand(seed) < p))
 
   /** Each edge plus its reverse, property columns carried along and
     * nothing deduplicated (a duplicate edge or a self-loop appears
@@ -154,9 +137,8 @@ object PropertyGraph {
     * most this many out-edges. 16384 keeps a row of Pregel's
     * edge-attribute structs, ~32 bytes per (dst, weight) edge, near half
     * a MB; a hub pays one extra adjacency row per 16384 out-edges, noise
-    * next to the ~|V| rows a superstep joins. PageRank does not use the
-    * adjacency: it runs on its own dense arrays (see
-    * [[Algorithms.pageRank]]).
+    * next to the ~|V| rows a superstep joins. [[ArrayGraph]] programs do
+    * not use the adjacency.
     */
   val AdjacencyChunk = 16384
 

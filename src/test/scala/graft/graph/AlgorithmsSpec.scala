@@ -47,6 +47,122 @@ class AlgorithmsSpec extends SparkSpec {
     }
   }
 
+  /** Seeded random multigraph: duplicates, self-loops, a 25-vertex path
+    * (a long tail of supersteps), a K5 (a 4-core) and ids at both ends
+    * of the long range.
+    */
+  private def multigraph(seed: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    val pool = Seq(Long.MinValue, Long.MinValue + 1, Long.MaxValue - 1, Long.MaxValue) ++
+      Seq.fill(56)(rnd.nextLong() / (1L << rnd.nextInt(60)))
+    def any = pool(rnd.nextInt(pool.size))
+    val random = Seq.fill(150)((any, any))
+    val path = (0L until 25L).map(i => (1000L + i) -> (1001L + i)) :+ (any -> 1000L)
+    val k5 = for (a <- 1L to 5L; b <- 1L to 5L if a < b) yield (-a) -> (-b)
+    val extras = Seq(Long.MinValue -> Long.MaxValue, Long.MaxValue -> Long.MinValue,
+      -1L -> -1L, 1025L -> 1025L, 1025L -> 1024L)
+    random ++ random.take(30) ++ path ++ k5 ++ ((-1L -> any) +: extras)
+  }
+
+  /** Each vertex's distinct neighbours, as `symmetrize` gives them: both
+    * directions, duplicates once, a self-loop kept iff `loops`.
+    */
+  private def neighbours(pairs: Seq[(Long, Long)], loops: Boolean): Map[Long, Seq[Long]] =
+    pairs.filter { case (a, b) => loops || a != b }
+      .flatMap { case (a, b) => Seq(a -> b, b -> a) }.distinct
+      .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).sorted }
+
+  /** Synchronous min-label flooding: each round every label becomes the
+    * least of its own and its neighbours'. Returns the labels and the
+    * changed count of each round that changed a label.
+    */
+  private def plainComponents(pairs: Seq[(Long, Long)]): (Map[Long, Long], Seq[(Int, Long)]) = {
+    val nbrs = neighbours(pairs, loops = true)
+    var label = nbrs.map { case (v, _) => v -> v }
+    val log = Seq.newBuilder[(Int, Long)]
+    var round = 0
+    var changed = 1L
+    while (changed > 0) {
+      val next = nbrs.map { case (v, ns) => v -> (label(v) +: ns.map(label)).min }
+      changed = next.count { case (v, l) => l != label(v) }.toLong
+      round += 1
+      if (changed > 0) log += round -> changed
+      label = next
+    }
+    (label, log.result())
+  }
+
+  /** The k-core by peeling vertices of live degree below k to a fixpoint. */
+  private def plainKCore(pairs: Seq[(Long, Long)], k: Int): Set[Long] = {
+    val nbrs = neighbours(pairs, loops = false)
+    var alive = nbrs.keySet
+    var peeled = true
+    while (peeled) {
+      val next = alive.filter(v => nbrs(v).count(alive) >= k)
+      peeled = next.size < alive.size
+      alive = next
+    }
+    alive
+  }
+
+  /** Core numbers by Batagelj–Zaversnik peeling: repeatedly remove a
+    * vertex of least remaining degree; its core number is the largest
+    * such degree seen so far.
+    */
+  private def plainCoreness(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val nbrs = neighbours(pairs, loops = false)
+    val deg = scala.collection.mutable.Map(nbrs.map { case (v, ns) => v -> ns.size }.toSeq: _*)
+    val core = Map.newBuilder[Long, Long]
+    var k = 0
+    while (deg.nonEmpty) {
+      val (v, d) = deg.minBy { case (u, du) => (du, u) }
+      k = math.max(k, d)
+      core += v -> k.toLong
+      deg.remove(v)
+      nbrs(v).foreach(u => deg.get(u).foreach(du => deg(u) = du - 1))
+    }
+    core.result()
+  }
+
+  /** Synchronous label propagation: each round every vertex takes the
+    * most frequent label among its distinct neighbours (itself too if it
+    * has a self-loop), the larger label on ties.
+    */
+  private def plainLabelPropagation(pairs: Seq[(Long, Long)], iterations: Int): Map[Long, Long] = {
+    val nbrs = neighbours(pairs, loops = true)
+    var label = nbrs.map { case (v, _) => v -> v }
+    for (_ <- 1 to iterations)
+      label = nbrs.map { case (v, ns) =>
+        v -> ns.map(label).groupBy(identity).toSeq.map { case (l, ls) => (ls.size, l) }.max._2
+      }
+    label
+  }
+
+  private def longPairs(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("CC, kCore, coreness and labelPropagation equal plain single-thread loops on seeded multigraphs") {
+    for (seed <- Seq(1, 2, 3)) {
+      val pairs = multigraph(seed)
+      val e = edges(pairs: _*)
+      val (labels, log) = plainComponents(pairs)
+      val (cc, ccLog) = Algorithms.connectedComponentsWithDeltaLog(e)
+      assert(longPairs(cc) == labels, s"seed $seed: CC labels")
+      assert(ccLog.orderBy("iter").collect().map(r => r.getInt(0) -> r.getLong(1)).toSeq == log,
+        s"seed $seed: CC delta log")
+      assert(log.length >= 25, s"seed $seed: the path should take a superstep per hop")
+      for (k <- 1 to 3)
+        assert(Algorithms.kCore(e, k).collect().map(_.getLong(0)).toSet == plainKCore(pairs, k),
+          s"seed $seed: $k-core")
+      val core = plainCoreness(pairs)
+      assert(longPairs(Algorithms.coreness(e, iterations = 1000)) == core, s"seed $seed: coreness")
+      assert(core.values.max >= 4L, s"seed $seed: the K5 is a 4-core")
+      for (iters <- Seq(1, 2, 5))
+        assert(longPairs(Algorithms.labelPropagation(e, iterations = iters)) ==
+          plainLabelPropagation(pairs, iters), s"seed $seed: labelPropagation, $iters iterations")
+    }
+  }
+
   test("pageRank: cycle converges to uniform ranks") {
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L)
     val pr = Algorithms.pageRank(e, iterations = 10).collect()
@@ -137,7 +253,8 @@ class AlgorithmsSpec extends SparkSpec {
           labels(Algorithms.labelPropagation(e)),
           Algorithms.kCore(e, 2).collect().map(_.getLong(0)).toSet,
           ranks(Algorithms.pageRank(e, iterations = 10)),
-          ranks(Algorithms.pageRank(e, iterations = 10)))
+          ranks(Algorithms.pageRank(e, iterations = 10)),
+          labels(Algorithms.coreness(e, iterations = 1000)))
       } finally spark.conf.set(key, saved)
     }
     def bits(pr: Map[Long, Double]) = pr.map { case (v, x) => v -> java.lang.Double.doubleToRawLongBits(x) }
@@ -158,7 +275,24 @@ class AlgorithmsSpec extends SparkSpec {
       assert(got._3 == base._3, s"SCC labels differ at $parts partitions")
       assert(got._4 == base._4, s"label propagation differs at $parts partitions")
       assert(got._5 == base._5, s"2-core differs at $parts partitions")
+      assert(got._8 == base._8, s"coreness differs at $parts partitions")
     }
+  }
+
+  test("result frames recompute to the same bits after every cached RDD is dropped") {
+    val pairs = multigraph(4)
+    val e = edges(pairs: _*)
+    val (cc, log) = Algorithms.connectedComponentsWithDeltaLog(e)
+    val frames = Seq(Algorithms.pageRank(e, iterations = 6), cc, log,
+      Algorithms.kCore(e, 2), Algorithms.coreness(e, iterations = 1000),
+      Algorithms.labelPropagation(e, iterations = 3))
+    def rows = frames.map(_.collect().map(_.toSeq.map {
+      case x: Double => java.lang.Double.doubleToRawLongBits(x)
+      case x => x
+    }).toSeq.sortBy(_.toString))
+    val first = rows
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    assert(rows == first)
   }
 
   test("labelPropagation: clique converges to a single label") {
