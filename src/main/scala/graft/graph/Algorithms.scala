@@ -324,7 +324,7 @@ object Algorithms {
     val uniform = array_repeat(lit(1.0d / numLabels), numLabels)
     // native VecScale for the per-edge weighted copy and the renormalize
     val avg = graft.functions.VecMath.scaleDiv(col("msg.sumd"), col("msg.sw"))
-    val (state, _) = Pregel.run(verts, e,
+    val state = Pregel.run(verts, e,
       initial = Map("fixed" -> col("__seed").isNotNull,
         "dist" -> when(col("__seed").isNotNull, oneHot(col("__seed"))).otherwise(uniform)),
       sendMsg = struct(

@@ -7,7 +7,7 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
@@ -40,16 +40,28 @@ import org.apache.spark.storage.StorageLevel
   * dropped cached state recomputes from the shuffle's files.
   * Fixed-iteration runs chain supersteps lazily into the caller's job;
   * convergent runs use [[converge]].
+  *
+  * [[reversed]] is the graph with every edge turned round, laid out from
+  * the same routed edge blocks, so it costs no second edge shuffle. Both
+  * layouts number the vertices of a partition alike (its sorted ids), so
+  * one state RDD zips with either.
   */
 private[graph] final class ArrayGraph private (spark: SparkSession,
-    val parts: RDD[ArrayGraph.Part]) {
+    routed: RDD[(Int, (Boolean, Array[Long]))], undirected: Boolean, flipped: Boolean) {
   import ArrayGraph._
+
+  val parts: RDD[Part] = layout(routed, undirected, flipped)
+
+  /** This graph with every edge reversed. */
+  lazy val reversed: ArrayGraph = new ArrayGraph(spark, routed, undirected, !flipped)
 
   private val byIndex = new HashPartitioner(parts.getNumPartitions) // an Int key is its own partition
 
   /** One superstep from per-partition `state`: `send` gives each local
     * vertex's value and which vertices send; `next` the next state from
-    * the old one and the in-values.
+    * the old one and the in-values. `next` may update the state it is
+    * given in place: that is the partition's own copy, read back from
+    * the shuffle.
     */
   def superstep[S: ClassTag](state: RDD[S])(send: (Part, S) => (Array[Long], Int => Boolean))(
       next: (Part, S, Inbox) => S): RDD[S] = {
@@ -82,19 +94,23 @@ private[graph] final class ArrayGraph private (spark: SparkSession,
     val counts = ArrayBuffer.empty[Long]
     while (counts.length < maxIter && !counts.lastOption.contains(0L)) {
       val next = step(s).persist(StorageLevel.MEMORY_AND_DISK)
-      counts += spark.sparkContext.runJob(next, new Named((_: TaskContext, ss: Iterator[S]) => count(ss.next()))).sum
+      counts += total(next)(count)
       s.unpersist(blocking = false)
       s = next
     }
     (s, counts.toSeq)
   }
 
+  /** The sum of `count` over the partitions of `state`, in one job. */
+  def total[S](state: RDD[S])(count: S => Long): Long =
+    spark.sparkContext.runJob(state, new Named((_: TaskContext, ss: Iterator[S]) => count(ss.next()))).sum
+
   /** The frame (`id`, `name`) of each vertex's value in `values(state)`. */
   def column[S: ClassTag](state: RDD[S], name: String, t: DataType)(values: S => Array[_]): DataFrame =
-    spark.createDataFrame(parts.zipPartitions(state) { (ps, ss) =>
+    GraftShims.internalFrame(spark, parts.zipPartitions(state)(new Named((ps: Iterator[Part], ss: Iterator[S]) => {
       val (ids, x) = (ps.next().ids, values(ss.next()))
-      ids.indices.iterator.map(v => Row(ids(v), x(v)))
-    }, StructType(Seq(StructField("id", LongType, nullable = false), StructField(name, t, nullable = false))))
+      ids.indices.iterator.map(v => InternalRow(ids(v), x(v)))
+    })), StructType(Seq(StructField("id", LongType, nullable = false), StructField(name, t, nullable = false))))
 }
 
 private[graph] object ArrayGraph {
@@ -125,9 +141,18 @@ private[graph] object ArrayGraph {
       edges.select(col("src").cast(LongType), col("dst").cast(LongType))
         .queryExecution.toRdd
         .mapPartitions(route(n, _))
-        .partitionBy(new HashPartitioner(n))
-        .mapPartitionsWithIndex((p, blocks) => Iterator(Part(p, n, undirected, blocks.map(_._2))))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .partitionBy(new HashPartitioner(n)), undirected, flipped = false)
+  }
+
+  /** The cached parts of the routed blocks; `flipped` reads each out-edge
+    * block as an in-edge block and the reverse, which reverses the graph.
+    */
+  private def layout(routed: RDD[(Int, (Boolean, Array[Long]))], undirected: Boolean,
+                     flipped: Boolean): RDD[Part] = {
+    val n = routed.getNumPartitions
+    routed.mapPartitionsWithIndex((p, blocks) =>
+      Iterator(Part(p, n, undirected, blocks.map { case (_, (in, pairs)) => (in != flipped, pairs) })))
+      .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
   /** One vertex partition: `ids` sorted; `outDegree` per local vertex;

@@ -1,117 +1,123 @@
 package graft.graph
 
+import java.util.BitSet
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Contraction-phase algorithms — the reference's strongly-connected
   * components (`example_apps/stronglyconnectedcomponents.cpp:146-317`)
   * and minimum spanning forest (`example_apps/minimumspanningforest.cpp:
-  * 126-370`). Both are driver-orchestrated phase loops whose per-phase
-  * work is declarative DataFrame algebra; phase outputs are eagerly
-  * checkpointed (the Spark analog of the reference's
-  * `sharded_graph_output` re-shard between phases).
+  * 126-370`). SCC's phases are [[ArrayGraph]] supersteps over the graph
+  * and its reversed view. MSF is a driver-orchestrated phase loop of
+  * DataFrame algebra whose phase outputs are eagerly checkpointed (the
+  * Spark analog of the reference's `sharded_graph_output` re-shard
+  * between phases).
   */
 object Contraction {
 
-  /** Strongly connected components by trim + forward/backward coloring.
-    * Phases mirror the reference: trim vertices with in==0 or out==0
-    * (each is its own SCC), forward min-color flood, backward
-    * confirmation within equal color, peel, repeat.
-    * Returns (id, scc).
+  /** SCC's state of one partition: `alive`, the vertices in no SCC yet;
+    * `label`, a live vertex's colour and a dead one's SCC; `liveIn` and
+    * `liveOut`, the live in- and out-degrees; `dead`, the deaths that the
+    * degrees of the neighbours do not count yet; `sends`, the vertices
+    * that send in the next flood or confirm superstep.
+    */
+  private final case class Scc(alive: BitSet, label: Array[Long], liveIn: Array[Int], liveOut: Array[Int],
+      dead: BitSet, sends: BitSet)
+
+  /** Strongly connected components by trim + forward/backward colouring
+    * in phases, as in the reference, with the selective scheduling of its
+    * `bitset_scheduler.hpp:38-96`: only the vertices that changed send.
+    * Each phase
+    *  - trims (`stronglyconnectedcomponents.cpp:146-180`): a vertex with
+    *    no live in- or out-edge is its own SCC and dies; in the next
+    *    superstep it lowers the live in-degrees of its out-neighbours,
+    *    over the graph, and the live out-degrees of its in-neighbours,
+    *    over the reversed view; until a superstep kills no vertex;
+    *  - floods each live vertex's colour, the least live id that reaches
+    *    it, forward over live vertices;
+    *  - confirms backward from each root, a vertex whose colour is its
+    *    own id: a live vertex joins its colour's SCC once a confirmed
+    *    out-neighbour has that colour. The confirmed vertices die.
+    * Each SCC is labelled by its minimum id. The vertices are the
+    * endpoints of the non-self-loop edges, so self-loops alone give no
+    * rows. Returns (id, scc).
     */
   def stronglyConnectedComponents(edges: DataFrame, maxPhases: Int = 10000): DataFrame = {
-    val spark = edges.sparkSession
-    var e = PropertyGraph.fromEdges(edges.select("src", "dst")).withoutSelfEdges.edges
-      .distinct().transform(graft.graph.Iterate.ckpt)
-    // every count below comes from its frame's checkpoint job
-    // (Iterate.ckptN), not from a count() action of its own
-    var (remaining, live) =
-      graft.graph.Iterate.ckptN(PropertyGraph.fromEdges(e).vertices)
-    // assigned SCCs: lazy projections over frames the loop already
-    // checkpoints, unioned once at the end
-    var assignedParts = Vector.empty[DataFrame]
-
+    val g = ArrayGraph.directed(PropertyGraph.fromEdges(edges).withoutSelfEdges.edges)
+    val r = g.reversed
+    var state = g.parts.map { p =>
+      val all = new BitSet(p.size)
+      all.set(0, p.size)
+      Scc(all, p.ids.clone(), Array.tabulate(p.size)(p.inDegree), p.outDegree.clone(), new BitSet, new BitSet)
+    }
+    var live = g.total(g.parts)(_.size.toLong)
+    val tell: (ArrayGraph.Part, Scc) => (Array[Long], Int => Boolean) =
+      (p, s) => (Array.tabulate(p.size)(v => if (s.dead.get(v)) 1L else 0L), s.dead.get _)
     var phase = 0
     while (live > 0 && phase < maxPhases) {
-      // --- trim: vertices with no in- or no out-edge are singleton SCCs
-      // (stronglyconnectedcomponents.cpp:146-180)
-      var trimmed = true
-      while (trimmed) {
-        val haveIn = e.select(col("dst").as("id")).distinct()
-        val haveOut = e.select(col("src").as("id")).distinct()
-        // `both` is read once, inside single's checkpoint
-        val both = haveIn.join(haveOut, "id")
-        val (single, nSingle) = graft.graph.Iterate.ckptN(
-          remaining.join(both, Seq("id"), "left_anti"))
-        if (nSingle == 0L) trimmed = false
-        else {
-          assignedParts :+= single.select(col("id"), col("id").as("scc"))
-          val (rem2, live2) = graft.graph.Iterate.ckptN(
-            remaining.join(single, Seq("id"), "left_anti"))
-          remaining = rem2
-          live = live2
-          e = e.join(single.withColumnRenamed("id", "t1"), col("src") === col("t1"), "left_anti")
-            .join(single.withColumnRenamed("id", "t2"), col("dst") === col("t2"), "left_anti")
-            .transform(graft.graph.Iterate.ckpt)
+      val (trimmed, died) = g.converge(state, Int.MaxValue)(_.dead.cardinality.toLong) { s =>
+        r.superstep(g.superstep(s)(tell) { (p, s, in) =>
+          for (v <- 0 until p.size; j <- 0 until in.gather(v)) s.liveIn(v) -= in.values(j).toInt
+          s
+        })(tell) { (p, s, in) =>
+          val dead = new BitSet(p.size)
+          for (v <- 0 until p.size) {
+            for (j <- 0 until in.gather(v)) s.liveOut(v) -= in.values(j).toInt
+            if (s.alive.get(v) && (s.liveIn(v) == 0 || s.liveOut(v) == 0)) dead.set(v)
+          }
+          // a trimmed vertex is its own SCC, and a flood starts from the live ids
+          for (v <- 0 until p.size if s.alive.get(v)) s.label(v) = p.ids(v)
+          s.alive.andNot(dead)
+          s.copy(dead = dead, sends = s.alive.clone().asInstanceOf[BitSet])
         }
       }
+      live -= died.sum
+      state = trimmed
       if (live > 0) {
-        // --- forward min-color flood to fixpoint: only recolored
-        // vertices send, and the run ends at the first superstep that
-        // recolors nothing
-        val (color, _) = Pregel.run(remaining, e,
-          initial = Map("color" -> col("id")),
-          sendMsg = col("src_color"),
-          aggMsg = min(col("msg")),
-          update = Map("color" -> least(col("color"), col("msg"))),
-          maxIter = Int.MaxValue, activeOnly = true)
-        // --- backward confirm: reverse-BFS from each color root through
-        // vertices of the same color; reached set = that SCC. At the
-        // flood's fixpoint an edge v→u has color(u) <= color(v), so over
-        // the reversed edges a vertex hears only colors <= its own, and
-        // the largest it hears equals its own color iff a confirmed
-        // out-neighbour shares it.
-        val (confirmed, _) = Pregel.run(color,
-          e.select(col("dst").as("src"), col("src").as("dst")),
-          initial = Map("color" -> col("color"),
-            "scc" -> when(col("id") === col("color"), col("color"))),
-          sendMsg = col("src_scc"),
-          aggMsg = max(col("msg")),
-          update = Map("color" -> col("color"),
-            "scc" -> coalesce(col("scc"), when(col("msg") === col("color"), col("msg")))),
-          maxIter = Int.MaxValue, activeOnly = true)
-        val reached = confirmed.filter(col("scc").isNotNull).select("id", "scc")
-        assignedParts :+= reached
-        val (rem2, live2) = graft.graph.Iterate.ckptN(
-          remaining.join(reached, Seq("id"), "left_anti"))
-        remaining = rem2
-        live = live2
-        // only a later phase reads the edge set
-        if (live > 0)
-          e = e.join(reached.withColumnRenamed("id", "t1").select("t1"),
-              col("src") === col("t1"), "left_anti")
-            .join(reached.withColumnRenamed("id", "t2").select("t2"),
-              col("dst") === col("t2"), "left_anti")
-            .transform(graft.graph.Iterate.ckpt)
+        // a dead vertex ships Long.MaxValue, which lowers no colour
+        val (flooded, _) = g.converge(trimmed, Int.MaxValue)(_.sends.cardinality.toLong) {
+          g.superstep(_) { (p, s) =>
+            (Array.tabulate(p.size)(v => if (s.alive.get(v)) s.label(v) else Long.MaxValue), s.sends.get _)
+          } { (p, s, in) =>
+            val moved = new BitSet(p.size)
+            for (v <- 0 until p.size if s.alive.get(v); j <- 0 until in.gather(v) if in.values(j) < s.label(v)) {
+              s.label(v) = in.values(j)
+              moved.set(v)
+            }
+            s.copy(sends = moved)
+          }
+        }
+        // A root confirms itself. A live vertex that is not a root ships
+        // Long.MaxValue, which equals no live colour: only a root can have
+        // it. A dead vertex ships its SCC, a dead id, which is no live
+        // colour either, unless it joined in this phase.
+        val (confirmed, joined) = g.converge(flooded, Int.MaxValue)(_.sends.cardinality.toLong) {
+          r.superstep(_) { (p, s) =>
+            val root = (v: Int) => s.alive.get(v) && s.label(v) == p.ids(v)
+            (Array.tabulate(p.size)(v => if (s.alive.get(v) && !root(v)) Long.MaxValue else s.label(v)),
+              v => s.sends.get(v) || root(v))
+          } { (p, s, in) =>
+            val joined = new BitSet(p.size)
+            for (v <- 0 until p.size if s.alive.get(v))
+              if (s.label(v) == p.ids(v) || (0 until in.gather(v)).exists(in.values(_) == s.label(v))) joined.set(v)
+            s.alive.andNot(joined)
+            s.dead.or(joined)
+            s.copy(sends = joined)
+          }
+        }
+        live -= joined.sum
+        state = confirmed
       }
       phase += 1
     }
-    // Every phase removes at least one SCC (the forward-flood roots are
-    // confirmed backward), so the loop always drains; the phase cap is a
-    // runaway guard only. Never fabricate labels — fail loudly instead
-    // (the reference iterates to empty too,
-    // stronglyconnectedcomponents.cpp:146-317).
+    // Every phase confirms at least its roots, so the loop drains; the
+    // phase cap is a runaway guard only. Never fabricate labels — fail
+    // loudly instead.
     if (live > 0)
-      throw new IllegalStateException(
-        s"SCC did not converge within $maxPhases phases ($live vertices left)")
-    val emptyAssigned = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("scc",
-          org.apache.spark.sql.types.LongType))))
-    (emptyAssigned +: assignedParts).reduce(_ unionAll _)
+      throw new IllegalStateException(s"SCC did not converge within $maxPhases phases ($live vertices left)")
+    g.column(state, "scc", LongType)(_.label)
   }
 
   /** Minimum spanning forest by Borůvka contraction — per-component

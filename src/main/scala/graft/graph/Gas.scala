@@ -11,18 +11,14 @@ import org.apache.spark.sql.{Column, DataFrame}
   * gather   → [[Pregel]] message expression over (edge ⋈ src-state)
   * sum      → the message merge aggregate
   * apply    → the vertex update expressions
-  * scatter  → implicit: the next superstep's gather reads the new state;
-  *            a null gather sends nothing, and with `activeOnly` only
-  *            the vertices whose state changed last superstep gather
-  *            again (the reference's selective signalling); the run
-  *            stops when a superstep changes nothing
+  * scatter  → implicit: every vertex gathers again in the next
+  *            superstep, from the new state; a null gather sends nothing
   */
 final case class GasProgram(
     initial: Map[String, Column],
     gather: Column,
     sum: Column,
-    apply: Map[String, Column],
-    activeOnly: Boolean = false)
+    apply: Map[String, Column])
 
 object Gas {
   /** Run a GAS program for `iterations` supersteps. */
@@ -33,6 +29,5 @@ object Gas {
       sendMsg = program.gather,
       aggMsg = program.sum,
       update = program.apply,
-      maxIter = iterations,
-      activeOnly = program.activeOnly)._1
+      maxIter = iterations)
 }

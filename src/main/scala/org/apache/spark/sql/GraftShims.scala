@@ -34,6 +34,13 @@ object GraftShims {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** The frame of `rows` under `schema`, taken as they are: no external
+    * `Row` is converted, and no closure of the session's is cleaned.
+    */
+  def internalFrame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+                    schema: types.StructType): DataFrame =
+    spark.asInstanceOf[CSparkSession].internalCreateDataFrame(rows, schema)
+
   /** Flush the scheduler listener bus (private[spark]) so metrics
     * harvested by a SparkListener are complete before they are read —
     * listener delivery is async relative to job completion.

@@ -160,7 +160,29 @@ class AlgorithmsSpec extends SparkSpec {
       for (iters <- Seq(1, 2, 5))
         assert(longPairs(Algorithms.labelPropagation(e, iterations = iters)) ==
           plainLabelPropagation(pairs, iters), s"seed $seed: labelPropagation, $iters iterations")
+      val scc = Tarjan.components(pairs)
+      assert(longPairs(Contraction.stronglyConnectedComponents(e)) == scc, s"seed $seed: SCC")
+      assert(scc(Long.MaxValue) == Long.MinValue, s"seed $seed: the extreme ids share an SCC")
     }
+    // a min-colour flood over the cycle 3→4→2→3, entered from 1: a vertex
+    // that receives a colour but keeps its own must not keep sending
+    val cycle = Seq(1L -> 3L, 2L -> 3L, 3L -> 4L, 4L -> 2L)
+    assert(longPairs(Contraction.stronglyConnectedComponents(edges(cycle: _*))) == Tarjan.components(cycle))
+  }
+
+  test("ArrayGraph.reversed numbers each partition's vertices as the forward layout does, and is the reversed graph's layout") {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try {
+      val pairs = multigraph(1)
+      def arrays(g: ArrayGraph) = g.parts.map(p => Seq(p.index, p.ids.toSeq, p.outDegree.toSeq,
+        p.out.map(_.toSeq).toSeq, p.inOff.toSeq, p.inFrom.toSeq, p.inSlot.toSeq)).collect().toSeq
+      val g = ArrayGraph.directed(edges(pairs: _*))
+      val (fwd, rev) = (arrays(g), arrays(g.reversed))
+      assert(rev.map(_.take(2)) == fwd.map(_.take(2)), "vertex numbering")
+      assert(rev == arrays(ArrayGraph.directed(edges(pairs.map(_.swap): _*))), "layout")
+    } finally spark.conf.set(key, saved)
   }
 
   test("pageRank: cycle converges to uniform ranks") {
@@ -285,7 +307,7 @@ class AlgorithmsSpec extends SparkSpec {
     val (cc, log) = Algorithms.connectedComponentsWithDeltaLog(e)
     val frames = Seq(Algorithms.pageRank(e, iterations = 6), cc, log,
       Algorithms.kCore(e, 2), Algorithms.coreness(e, iterations = 1000),
-      Algorithms.labelPropagation(e, iterations = 3))
+      Algorithms.labelPropagation(e, iterations = 3), Contraction.stronglyConnectedComponents(e))
     def rows = frames.map(_.collect().map(_.toSeq.map {
       case x: Double => java.lang.Double.doubleToRawLongBits(x)
       case x => x
@@ -398,14 +420,14 @@ class AlgorithmsSpec extends SparkSpec {
     val e = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (1L, 3L, 10.0), (3L, 4L, 1.0))
       .toDF("src", "dst", "w")
     val v = Seq(1L, 2L, 3L, 4L).toDF("id")
-    val (dist, _) = Pregel.run(
+    val dist = Pregel.run(
       vertices = v, edges = e,
       initial = Map("dist" -> when(col("id") === 1L, 0.0).otherwise(lit(Double.PositiveInfinity))),
       sendMsg = when(col("src_dist") + col("w") < lit(Double.PositiveInfinity),
         col("src_dist") + col("w")),
       aggMsg = min(col("msg")),
       update = Map("dist" -> least(col("dist"), col("msg"))),
-      maxIter = 10, activeOnly = false)
+      maxIter = 10)
     val got = dist.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got == Map(1L -> 0.0, 2L -> 1.0, 3L -> 3.0, 4L -> 4.0))
   }
@@ -485,6 +507,9 @@ class AlgorithmsSpec extends SparkSpec {
     assert(log.columns.toSeq == Seq("iter", "nupdates"))
     assert(Algorithms.kCore(e, 1).collect().isEmpty)
     assert(Algorithms.coreness(e).collect().isEmpty)
+    assert(Contraction.stronglyConnectedComponents(e).collect().isEmpty)
+    // SCC's vertices are the endpoints of non-self-loop edges
+    assert(Contraction.stronglyConnectedComponents(edges(5L -> 5L, 7L -> 7L, 7L -> 7L)).collect().isEmpty)
   }
 
   test("self-loops only: CC and labelPropagation keep the vertex, kCore and coreness drop it") {

@@ -15,6 +15,8 @@ class ContractionSpec extends SparkSpec {
     assert(scc(4L) == scc(5L))
     assert(scc(1L) != scc(4L))
     assert(scc(6L) == 6L)
+    // phase 1 confirms {1, 2, 3} only: 4 and 5 take colour 1 over the bridge
+    intercept[IllegalStateException](Contraction.stronglyConnectedComponents(e, maxPhases = 1).collect())
   }
 
   test("SCC: DAG → all singletons") {
@@ -30,27 +32,9 @@ class ContractionSpec extends SparkSpec {
       .filter { case (a, b) => a != b }
     val scc = Contraction.stronglyConnectedComponents(pairs.toDF("src", "dst"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Tarjan's algorithm, each component labelled by its minimum id
-    val out = pairs.groupBy(_._1).map { case (v, es) => v -> es.map(_._2) }
-    val verts = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val index = scala.collection.mutable.Map[Long, Int]()
-    val low = scala.collection.mutable.Map[Long, Int]()
-    val stack = scala.collection.mutable.Stack[Long]()
-    val want = scala.collection.mutable.Map[Long, Long]()
-    def visit(v: Long): Unit = {
-      index(v) = index.size; low(v) = index(v); stack.push(v)
-      for (w <- out.getOrElse(v, Nil)) {
-        if (!index.contains(w)) { visit(w); low(v) = math.min(low(v), low(w)) }
-        else if (stack.contains(w)) low(v) = math.min(low(v), index(w))
-      }
-      if (low(v) == index(v)) {
-        val comp = Iterator.continually(stack.pop()).takeWhile(_ != v).toSeq :+ v
-        comp.foreach(want(_) = comp.min)
-      }
-    }
-    verts.foreach(v => if (!index.contains(v)) visit(v))
-    assert(want.values.toSet.size < verts.size, "the digraph has a non-trivial SCC")
-    assert(scc == want.toMap)
+    val want = Tarjan.components(pairs)
+    assert(want.values.toSet.size < want.size, "the digraph has a non-trivial SCC")
+    assert(scc == want)
   }
 
   test("MSF: known minimum spanning tree") {
