@@ -38,10 +38,12 @@ object GraftSession {
   /** Run `f` with ObjectHashAggregate's sort fallback raised to 4M
     * in-memory groups, restoring the previous setting after.
     *
-    * The trainer gradient aggregates (VecScaleSum/VecSum/GramAgg) need
-    * this: the default fallback threshold is 128 DISTINCT KEYS, so any
-    * real-scale gradient aggregate (one group per feature/item id)
-    * immediately degrades to sort-based aggregation, which SERIALIZES
+    * The trainer gradient aggregates (VecScaleSum/VecSum, and GramAgg in
+    * AlsTensor) need this; AlsNormal folds its normal equations inside
+    * ArrayGraph supersteps and does not use it. The default fallback
+    * threshold is 128 DISTINCT KEYS, so any real-scale gradient
+    * aggregate (one group per feature/item id) immediately degrades to
+    * sort-based aggregation, which SERIALIZES
     * every vector buffer through the sorter/spill files — r7 caught FM
     * runs stalled 300 s with executor threads inside buffer-serialize +
     * FileOutputStream. Those aggregates bound memory structurally

@@ -1,8 +1,17 @@
 package graft.cf
 
+import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
+import java.util.BitSet
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
+
+import graft.graph.ArrayGraph
 
 /** ALS by per-vertex normal equations — the reference's own algorithm
   * (`toolkits/collaborative_filtering/als.cpp:123-149`: accumulate
@@ -10,15 +19,18 @@ import org.apache.spark.sql.expressions.UserDefinedFunction
   * variant (`wals.cpp`: per-rating confidence weights in both the
   * Gram matrix and the right-hand side).
   *
-  * Spark shape: each half-step is `ratings ⋈ otherFactors` followed by
-  * `groupBy(thisSide)` with the native [[graft.functions.GramAgg]]
-  * partial aggregate folding XᵗX/Xᵗy map-side, then a local rank×rank
-  * solve per vertex. The shuffle carries rank²+rank+1 doubles per key
-  * per mapper — independent of vertex degree, so a power-law hot item
-  * costs O(#mappers·rank²) merge work instead of materializing its
-  * whole rating list on one reducer. Two shuffles per iteration (keyed
-  * by user then item), same scale behavior as `ml.recommendation.ALS`,
-  * but with arbitrary per-rating weights, which the built-in lacks.
+  * Spark shape: the ratings are one [[graft.graph.ArrayGraph]] with
+  * edges user → item, each carrying its (rating, weight), laid out once
+  * per call. An item half-step is one superstep over it: each user ships
+  * its rank-wide factor once per partition pair that needs it (not once
+  * per rating), one shuffle, and one narrow fold in which each item
+  * accumulates w·p pᵗ, w·r·p and n over its in-edges in (source
+  * partition, slot) order and solves; the train RMSE sums fold into the
+  * same pass. A user half-step is the same over the reversed view. All
+  * iterations chain lazily into the one job that collects the RMSE
+  * trace, so there is no join, aggregate, UDF or checkpoint, and the
+  * factors are bit-reproducible for a given partition count. Unlike
+  * `ml.recommendation.ALS`, ratings carry arbitrary weights.
   */
 object AlsNormal {
 
@@ -111,100 +123,170 @@ object AlsNormal {
     }
   }
 
-  private def gramSolver(rank: Int, lambda: Double,
-                         sparsity: Option[Int] = None): UserDefinedFunction =
-    udf { g: Seq[Double] =>
-      val x = solveFromGram(g, rank, lambda)
-      sparsity.map(hardThreshold(x, _)).getOrElse(x)
-    }
-
   private def dotArr(a: Column, b: Column): Column =
     graft.functions.VecDot.of(a, b)
 
-  private def initFactors(ids: DataFrame, rank: Int, seed: Long): DataFrame =
-    ids.select(col("id"),
-      transform(sequence(lit(0), lit(rank - 1)),
-        k => pmod(xxhash64(col("id"), k, lit(seed)), lit(1000L)).cast("double") / 1000.0)
-        .as("f"))
+  /** One partition's factors, `rank` doubles per local vertex: the user
+    * factor of vertex v at `rank * v` of `p`, valid when `hasP(v)`, and
+    * its item factor likewise in `q`. `log` holds (Σ w·err², Σ w, rows)
+    * of the train RMSE of each iteration so far. A vertex is a user by
+    * its out-edges and an item by its in-edges, so a user and an item of
+    * one id share it.
+    */
+  private final class Factors(val p: Array[Double], val hasP: BitSet, val q: Array[Double],
+                              val hasQ: BitSet, val log: Array[Double]) extends Serializable
 
-  /** Train (weighted) ALS. `ratings` needs `user`, `item`, `rating` and
-    * optionally `weight` (absent → 1.0, plain ALS). λ follows the
-    * reference's per-vertex `λ·n` regularization (weighted-λ ALS).
+  /** Train (weighted) ALS. `ratings` needs integral `user` and `item`
+    * ids, a `rating` and optionally a `weight` (absent → 1.0, plain ALS);
+    * rows with a null in any of them are skipped, and duplicate (user,
+    * item) rows each count. λ follows the reference's per-vertex `λ·n`
+    * regularization (weighted-λ ALS), n counting the rows solved over.
+    * Each iteration solves every user from the item factors, then every
+    * item from the new user factors; its train RMSE is over the rows
+    * whose user and item both have a factor. The factor frames keep the
+    * `user` and `item` id types; with no iteration the user frame is
+    * empty and the item frame holds the start.
     *
     * @param warmStartItemFactors optional (id, f) item factors to resume
     *   from — the reference's `load_factors_from_file` warm start
     *   (`als.cpp:207-210`, `io.hpp:611-760`); absent → hash-seeded init.
-    */
-  /** @param inputPrepared caller guarantees `ratings` is already exactly
-    *   (user, item, rating: double, w: double), hash-partitioned by user
-    *   and materialized (Iterate.ckpt) — skip the per-call
-    *   select/repartition/checkpoint. Added for Pmf (r15 batch 2): its
-    *   Gibbs loop calls train() once per sweep on the SAME prepared
-    *   frame, and the redundant prep re-shuffled + re-materialized the
-    *   full rating table every sweep. The skipped shuffle is an identity
-    *   permutation (already hash(user)-partitioned input, same partition
-    *   count), so GramAgg accumulation order — hence every factor bit —
-    *   is unchanged.
+    *   An item without a warm factor contributes nothing until it gets
+    *   one, and a vertex with no neighbour that has a factor gets none.
     */
   def train(ratings: DataFrame, rank: Int = 8, iterations: Int = 5,
             lambda: Double = 0.065, seed: Long = 42L,
             warmStartItemFactors: Option[DataFrame] = None,
-            sparsity: Option[Int] = None,
-            inputPrepared: Boolean = false): Model =
-      graft.GraftSession.withTrainerAggCapacity(ratings.sparkSession) {
-    val w = if (ratings.columns.contains("weight")) col("weight").cast("double") else lit(1.0d)
-    // r15 ADVICE: explicit parens on the else branch (the leading-dot
-    // continuation bound correctly but read ambiguously) + a cheap
-    // schema assert on the prepared-frame contract, so a wrong caller
-    // fails here instead of with an unrelated analysis error in GramAgg.
-    val r = if (inputPrepared) {
-      require(ratings.columns.contains("w") &&
-        ratings.schema("rating").dataType ==
-          org.apache.spark.sql.types.DoubleType,
-        "inputPrepared=true requires (user, item, rating: double, w) " +
-          "already partitioned+materialized; got " +
-          ratings.schema.simpleString)
-      ratings
-    } else {
-      ratings.select(col("user"), col("item"), col("rating").cast("double"), w.as("w"))
-        .repartition(col("user")).transform(graft.graph.Iterate.ckpt)
+            sparsity: Option[Int] = None): Model = {
+    val (userType, itemType) = (idType(ratings, "user"), idType(ratings, "item"))
+    val w = if (ratings.columns.contains("weight")) col("weight") else lit(1.0d)
+    val g = ArrayGraph.directed(
+      ratings.select(col("user").as("src"), col("item").as("dst"), col("rating"), w.as("w")), col("rating"), col("w"))
+    var state = start(g, rank, seed, itemType != LongType, warmStartItemFactors)
+    val solve = (a: Array[Array[Double]]) => sparsity.foldLeft(eliminate(a, rank))(hardThreshold)
+    for (_ <- 1 to iterations)
+      state = halfStep(g, halfStep(g.reversed, state, rank, lambda, solve, items = false),
+        rank, lambda, solve, items = true)
+    state.persist(StorageLevel.MEMORY_AND_DISK) // the RMSE job computes it; the factor frames read it
+    val rmse = if (iterations == 0) Nil else {
+      val logs = g.each(state)(_.log)
+      (0 until iterations).map { i =>
+        val Seq(se, sw, n) = (0 until 3).map(j => logs.map(_(3 * i + j)).sum)
+        require(n > 0, "AlsNormal.train: no rating row has a non-null user, item, rating and weight" +
+          (if (warmStartItemFactors.isEmpty) "" else " and an item with a warm-start factor"))
+        math.sqrt(se / sw)
+      }
     }
-    val solve = gramSolver(rank, lambda, sparsity)
-
-    var vf = warmStartItemFactors
-      .getOrElse(initFactors(r.select(col("item").as("id")).distinct(), rank, seed))
-      .select(col("id"), col("f"))
-      .transform(graft.graph.Iterate.ckpt)
-    var uf: DataFrame = null
-    var rmses = Vector.empty[Double]
-    // deferred trace (see MfSgd.train): lazy single-row frames over the
-    // checkpointed factors, collected once after the loop
-    var rmseFrames = Vector.empty[DataFrame]
-    for (iter <- 1 to iterations) {
-      uf = r.join(vf.withColumnRenamed("id", "item").withColumnRenamed("f", "q"), "item")
-        .groupBy(col("user").as("id"))
-        .agg(graft.functions.GramAgg.of(col("q"), col("rating"), col("w"), rank).as("g"))
-        .select(col("id"), solve(col("g")).as("f"))
-        .transform(graft.graph.Iterate.ckpt)
-      vf = r.join(uf.withColumnRenamed("id", "user").withColumnRenamed("f", "p"), "user")
-        .groupBy(col("item").as("id"))
-        .agg(graft.functions.GramAgg.of(col("p"), col("rating"), col("w"), rank).as("g"))
-        .select(col("id"), solve(col("g")).as("f"))
-        .transform(graft.graph.Iterate.ckpt)
-      val preds = r
-        .join(uf.select(col("id").as("user"), col("f").as("p")), "user")
-        .join(vf.select(col("id").as("item"), col("f").as("q")), "item")
-        .select(col("rating"), dotArr(col("p"), col("q")).as("pred"), col("w"))
-      rmseFrames :+= preds
-        .agg(sqrt(sum(col("w") * pow(col("rating") - col("pred"), 2)) / sum("w"))
-          .as("rmse"))
-        .select(lit(iter).as("it"), col("rmse"))
-    }
-    if (rmseFrames.nonEmpty)
-      rmses = rmseFrames.reduce(_ unionAll _).orderBy("it").collect()
-        .map(_.getDouble(1)).toVector
-    Model(uf, vf, rmses)
+    if (iterations > 0) g.reversed.parts.unpersist(blocking = false) // the frames read `g.parts` and `state` only
+    def frame(t: DataType, f: Factors => (Array[Double], BitSet)) =
+      g.column(state, "f", ArrayType(DoubleType, containsNull = false)) { s =>
+        val (x, has) = f(s)
+        Array.tabulate(x.length / rank)(v =>
+          if (has.get(v)) UnsafeArrayData.fromPrimitiveArray(x.slice(rank * v, rank * v + rank)) else null)
+      }.select(col("id").cast(t).as("id"), col("f"))
+    Model(frame(userType, s => (s.p, s.hasP)), frame(itemType, s => (s.q, s.hasQ)), rmse)
   }
+
+  /** The type of `ratings`' id column `name`, which must be integral. */
+  private def idType(ratings: DataFrame, name: String): DataType = ratings.schema(name).dataType match {
+    case t @ (ByteType | ShortType | IntegerType | LongType) => t
+    case t => throw new IllegalArgumentException(
+      s"AlsNormal.train: `$name` must be an integral id, not ${t.simpleString}")
+  }
+
+  /** The state before the first iteration: each item's warm-start factor,
+    * or else `pmod(xxhash64(id, k, seed), 1000) / 1000` for k in
+    * 0 until rank, hashed as Spark's `xxhash64` hashes an id of the
+    * item column's type (`intIds`: byte, short or int).
+    */
+  private def start(g: ArrayGraph, rank: Int, seed: Long, intIds: Boolean,
+                    warm: Option[DataFrame]): RDD[Factors] = {
+    val n = g.parts.getNumPartitions
+    // (id, f) in the partition of its vertex: seeded per vertex of `g.parts`, or a warm start routed there
+    val items = warm match {
+      case None => g.parts.flatMap(part => (0 until part.size).iterator.filter(part.inDegree(_) > 0).map { v =>
+        val id = part.ids(v)
+        val h = if (intIds) XXH64.hashInt(id.toInt, 42L) else XXH64.hashLong(id, 42L) // 42: xxhash64's own seed
+        (id, Array.tabulate(rank)(k => Math.floorMod(XXH64.hashLong(seed, XXH64.hashInt(k, h)), 1000L).toDouble / 1000.0))
+      })
+      case Some(df) =>
+        idType(df, "id") // fails on a non-integral id, which the cast below would make null
+        df.select(col("id").cast(LongType), col("f")).queryExecution.toRdd
+          .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None
+            else Some((ArrayGraph.partOf(r.getLong(0), n), (r.getLong(0), r.getArray(1).toDoubleArray()))))
+          .partitionBy(new HashPartitioner(n)).values
+    }
+    g.parts.zipPartitions(items) { (parts, rows) =>
+      val part = parts.next()
+      val s = new Factors(new Array[Double](rank * part.size), new BitSet(part.size),
+        new Array[Double](rank * part.size), new BitSet(part.size), Array.emptyDoubleArray)
+      rows.foreach { case (id, f) =>
+        require(f.length == rank, s"AlsNormal.train: warm-start factor of item $id has ${f.length} values, not $rank")
+        val v = java.util.Arrays.binarySearch(part.ids, id)
+        if (v >= 0 && part.inDegree(v) > 0) {
+          require(!s.hasQ.get(v), s"AlsNormal.train: item $id has two warm-start factors")
+          System.arraycopy(f, 0, s.q, rank * v, rank)
+          s.hasQ.set(v)
+        }
+      }
+      Iterator(s)
+    }
+  }
+
+  /** One half-step over `g`: each vertex with a factor on the sending
+    * side (users when `items`, else items) ships it, and each vertex with
+    * in-edges from a sender with a factor solves its own from them. The
+    * item half-step also appends its iteration's RMSE sums to the log.
+    */
+  private def halfStep(g: ArrayGraph, state: RDD[Factors], rank: Int, lambda: Double,
+                       solve: Array[Array[Double]] => Array[Double], items: Boolean): RDD[Factors] =
+    // per slot: the factor's bits and then 1 if it is valid, 0 if not
+    g.superstep(state, rank + 1) { (part, s) =>
+      val (x, has) = if (items) (s.p, s.hasP) else (s.q, s.hasQ)
+      val m = new Array[Long]((rank + 1) * part.size)
+      for (v <- 0 until part.size) {
+        for (k <- 0 until rank) m((rank + 1) * v + k) = doubleToRawLongBits(x(rank * v + k))
+        if (has.get(v)) m((rank + 1) * v + rank) = 1L
+      }
+      (m, ArrayGraph.All)
+    } { (part, s, in) =>
+      val (y, has) = (new Array[Double](rank * part.size), new BitSet(part.size))
+      val (a, sums) = (Array.ofDim[Double](rank, rank + 1), new Array[Double](3))
+      // entry i of in-value j's factor, and whether that factor is valid
+      def x(j: Int, i: Int) = longBitsToDouble(in.values((rank + 1) * j + i))
+      def valid(j: Int) = in.values((rank + 1) * j + rank) != 0L
+      for (v <- 0 until part.size) {
+        val (k, e) = (in.gather(v), part.inOff(v)) // in-value j is in-edge e + j, which carries (rating, weight)
+        require(k == part.inDegree(v)) // every pair ships, so every in-edge has its value
+        a.foreach(java.util.Arrays.fill(_, 0.0))
+        var n = 0
+        for (j <- 0 until k if valid(j)) {
+          val (r, w) = (part.inData(2 * (e + j)), part.inData(2 * (e + j) + 1))
+          var i = 0
+          while (i < rank) {
+            val row = a(i)
+            val wxi = w * x(j, i)
+            var c = 0
+            while (c < rank) { row(c) += wxi * x(j, c); c += 1 }
+            row(rank) += wxi * r
+            i += 1
+          }
+          n += 1
+        }
+        if (n > 0) {
+          for (i <- 0 until rank) a(i)(i) += lambda * n
+          System.arraycopy(solve(a), 0, y, rank * v, rank)
+          has.set(v)
+          if (items) for (j <- 0 until k if valid(j)) {
+            val (r, w) = (part.inData(2 * (e + j)), part.inData(2 * (e + j) + 1))
+            var pred = 0.0
+            for (i <- 0 until rank) pred += x(j, i) * y(rank * v + i)
+            sums(0) += w * (r - pred) * (r - pred); sums(1) += w; sums(2) += 1
+          }
+        }
+      }
+      if (items) new Factors(s.p, s.hasP, y, has, s.log ++ sums)
+      else new Factors(y, has, s.q, s.hasQ, s.log)
+    }
 
   /** Predict for (user, item) pairs. */
   def predict(model: Model, pairs: DataFrame): DataFrame =

@@ -40,20 +40,10 @@ object Pmf {
   def train(ratings: DataFrame, rank: Int = 8, burnIn: Int = 2,
             samples: Int = 3, lambda: Double = 0.065,
             noiseScale: Double = 0.01, seed: Long = 42L): Model = {
-    // r15 batch 2: prepared ONCE in AlsNormal.train's exact input shape
-    // (user, item, rating, w=1.0, hash(user)-partitioned, checkpointed)
-    // so the per-sweep train() calls skip their redundant
-    // select/repartition/checkpoint of the same 600k-row frame — the
-    // Gibbs loop was re-shuffling and re-materializing the rating table
-    // once per sweep (6x per query). Identity-permutation argument in
-    // AlsNormal.train's inputPrepared doc: factor bits unchanged.
-    val r = ratings.select(col("user"), col("item"),
-        col("rating").cast("double"), lit(1.0d).as("w"))
-      .repartition(col("user")).transform(graft.graph.Iterate.ckpt)
+    val r = ratings.drop("weight") // the draws are unweighted
     var rmses = Vector.empty[Double]
     var accum: DataFrame = null
-    var model = AlsNormal.train(r, rank, iterations = 1, lambda, seed,
-      inputPrepared = true)
+    var model = AlsNormal.train(r, rank, iterations = 1, lambda, seed)
     for (sweep <- 1 to (burnIn + samples)) {
       // perturb item factors with posterior-scale noise, then one ALS
       // sweep conditioned on the draw
@@ -63,7 +53,7 @@ object Pmf {
             k => gaussian(col("id"), k, sweep, seed) * noiseScale),
           (f, n) => f + n).as("f"))
       model = AlsNormal.train(r, rank, iterations = 1, lambda, seed,
-        warmStartItemFactors = Some(noisy), inputPrepared = true)
+        warmStartItemFactors = Some(noisy))
       rmses :+= model.trainRmse.last
       if (sweep > burnIn) {
         val preds = AlsNormal.predict(model, r.select("user", "item"))

@@ -7,15 +7,15 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.{HashPartitioner, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** A graph as dense co-partitioned arrays, and the one superstep that
-  * PageRank, connected components, k-core, coreness and label
-  * propagation run on: the reference's in-memory vertex values updated
+  * PageRank, connected components, k-core, coreness, label propagation,
+  * SCC and ALS run on: the reference's in-memory vertex values updated
   * over the edges of each interval (`pagerank.cpp:121-146`), partitioned
   * as in GraphX. Vertices are hash-partitioned by id into
   * `spark.sql.shuffle.partitions` partitions, each holding its ids
@@ -28,11 +28,14 @@ import org.apache.spark.storage.StorageLevel
   * the slots of the partition pair. Its receiver side is a CSR of each
   * local vertex's in-edges as (source partition, slot). Both sides number
   * a pair's slots by sorted source id, so they agree without exchanging
-  * a routing table.
+  * a routing table. A graph built with a payload (ALS's rating and
+  * weight) also carries each edge's doubles, aligned with the in-edge
+  * CSR; a graph without one carries nothing more.
   *
   * A [[superstep]] is one narrow pass that ships each pair's slot values
-  * as one `Array[Long]` (nothing when none of the pair's vertices sends;
-  * PageRank ships its doubles' raw bits), one shuffle, and one narrow
+  * as one `Array[Long]` of `width` values per slot (nothing when none of
+  * the pair's vertices sends; PageRank ships its doubles' raw bits, ALS
+  * a rank-wide factor per slot), one shuffle, and one narrow
   * pass in which each vertex folds its in-values, gathered in (source
   * partition, slot) order, so every fold is bit-reproducible for a given
   * partition count. Each partition also ships its own state to itself in
@@ -46,30 +49,30 @@ import org.apache.spark.storage.StorageLevel
   * layouts number the vertices of a partition alike (its sorted ids), so
   * one state RDD zips with either.
   */
-private[graph] final class ArrayGraph private (spark: SparkSession,
-    routed: RDD[(Int, (Boolean, Array[Long]))], undirected: Boolean, flipped: Boolean) {
+private[graft] final class ArrayGraph private (spark: SparkSession,
+    routed: RDD[(Int, (Boolean, Array[Long]))], undirected: Boolean, payload: Int, flipped: Boolean) {
   import ArrayGraph._
 
-  val parts: RDD[Part] = layout(routed, undirected, flipped)
+  val parts: RDD[Part] = layout(routed, undirected, payload, flipped)
 
-  /** This graph with every edge reversed. */
-  lazy val reversed: ArrayGraph = new ArrayGraph(spark, routed, undirected, !flipped)
+  /** This graph with every edge reversed, each keeping its payload. */
+  lazy val reversed: ArrayGraph = new ArrayGraph(spark, routed, undirected, payload, !flipped)
 
   private val byIndex = new HashPartitioner(parts.getNumPartitions) // an Int key is its own partition
 
   /** One superstep from per-partition `state`: `send` gives each local
-    * vertex's value and which vertices send; `next` the next state from
-    * the old one and the in-values. `next` may update the state it is
-    * given in place: that is the partition's own copy, read back from
-    * the shuffle.
+    * vertex's `width` values (local vertex v's at `width * v`) and which
+    * vertices send; `next` the next state from the old one and the
+    * in-values. `next` may update the state it is given in place: that is
+    * the partition's own copy, read back from the shuffle.
     */
-  def superstep[S: ClassTag](state: RDD[S])(send: (Part, S) => (Array[Long], Int => Boolean))(
+  def superstep[S: ClassTag](state: RDD[S], width: Int = 1)(send: (Part, S) => (Array[Long], Int => Boolean))(
       next: (Part, S, Inbox) => S): RDD[S] = {
     val shipped = parts.zipPartitions(state)(new Named((ps: Iterator[Part], ss: Iterator[S]) => {
       val (p, s) = (ps.next(), ss.next())
       val (values, sends) = send(p, s)
       Iterator[(Int, Either[S, (Int, Array[Long])])]((p.index, Left(s))) ++
-        p.ship(values, sends).map { case (q, m) => (q, Right((p.index, m))) }
+        p.ship(values, sends, width).map { case (q, m) => (q, Right((p.index, m))) }
     })).partitionBy(byIndex)
     parts.zipPartitions(shipped)(new Named((ps: Iterator[Part], ms: Iterator[(Int, Either[S, (Int, Array[Long])])]) => {
       val p = ps.next()
@@ -79,7 +82,7 @@ private[graph] final class ArrayGraph private (spark: SparkSession,
         case (_, Left(s)) => own = Some(s)
         case (_, Right((src, m))) => from(src) = m
       }
-      Iterator(next(p, own.get, new Inbox(p, from)))
+      Iterator(next(p, own.get, new Inbox(p, from, width)))
     }))
   }
 
@@ -102,29 +105,36 @@ private[graph] final class ArrayGraph private (spark: SparkSession,
   }
 
   /** The sum of `count` over the partitions of `state`, in one job. */
-  def total[S](state: RDD[S])(count: S => Long): Long =
-    spark.sparkContext.runJob(state, new Named((_: TaskContext, ss: Iterator[S]) => count(ss.next()))).sum
+  def total[S](state: RDD[S])(count: S => Long): Long = each(state)(count).sum
 
-  /** The frame (`id`, `name`) of each vertex's value in `values(state)`. */
+  /** `f` of each partition's state, in partition order, in one job. */
+  def each[S, T: ClassTag](state: RDD[S])(f: S => T): Array[T] =
+    spark.sparkContext.runJob(state, new Named((_: TaskContext, ss: Iterator[S]) => f(ss.next())))
+
+  /** The frame (`id`, `name`) of each vertex's value in `values(state)`;
+    * a vertex whose value is null has no row.
+    */
   def column[S: ClassTag](state: RDD[S], name: String, t: DataType)(values: S => Array[_]): DataFrame =
     GraftShims.internalFrame(spark, parts.zipPartitions(state)(new Named((ps: Iterator[Part], ss: Iterator[S]) => {
       val (ids, x) = (ps.next().ids, values(ss.next()))
-      ids.indices.iterator.map(v => InternalRow(ids(v), x(v)))
+      ids.indices.iterator.map(v => InternalRow(ids(v), x(v))).filter(!_.isNullAt(1))
     })), StructType(Seq(StructField("id", LongType, nullable = false), StructField(name, t, nullable = false))))
 }
 
-private[graph] object ArrayGraph {
+private[graft] object ArrayGraph {
 
   /** The directed multigraph of `edges`' (`src`, `dst`) rows: duplicate
-    * edges and self-loops count. Rows with a null endpoint are skipped.
+    * edges and self-loops count. Each edge carries the doubles of
+    * `payload`, evaluated over its row ([[Part.inData]]). Rows with a null
+    * endpoint or payload value are skipped.
     */
-  def directed(edges: DataFrame): ArrayGraph = build(edges, undirected = false)
+  def directed(edges: DataFrame, payload: Column*): ArrayGraph = build(edges, undirected = false, payload)
 
   /** The undirected graph of `edges` as [[PropertyGraph.symmetrize]]
     * gives it: each edge in both directions, duplicates once, a self-loop
     * as one `(v, v)` edge. Rows with a null endpoint are skipped.
     */
-  def undirected(edges: DataFrame): ArrayGraph = build(edges, undirected = true)
+  def undirected(edges: DataFrame): ArrayGraph = build(edges, undirected = true, Nil)
 
   val All: Int => Boolean = _ => true // every vertex sends
 
@@ -135,23 +145,24 @@ private[graph] object ArrayGraph {
     def apply(a: A, b: B): C = f(a, b)
   }
 
-  private def build(edges: DataFrame, undirected: Boolean): ArrayGraph = {
+  private def build(edges: DataFrame, undirected: Boolean, payload: Seq[Column]): ArrayGraph = {
     val n = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val w = payload.length
     new ArrayGraph(edges.sparkSession,
-      edges.select(col("src").cast(LongType), col("dst").cast(LongType))
+      edges.select(col("src").cast(LongType) +: col("dst").cast(LongType) +: payload.map(_.cast(DoubleType)): _*)
         .queryExecution.toRdd
-        .mapPartitions(route(n, _))
-        .partitionBy(new HashPartitioner(n)), undirected, flipped = false)
+        .mapPartitions(route(n, w, _))
+        .partitionBy(new HashPartitioner(n)), undirected, w, flipped = false)
   }
 
   /** The cached parts of the routed blocks; `flipped` reads each out-edge
     * block as an in-edge block and the reverse, which reverses the graph.
     */
-  private def layout(routed: RDD[(Int, (Boolean, Array[Long]))], undirected: Boolean,
+  private def layout(routed: RDD[(Int, (Boolean, Array[Long]))], undirected: Boolean, payload: Int,
                      flipped: Boolean): RDD[Part] = {
     val n = routed.getNumPartitions
     routed.mapPartitionsWithIndex((p, blocks) =>
-      Iterator(Part(p, n, undirected, blocks.map { case (_, (in, pairs)) => (in != flipped, pairs) })))
+      Iterator(Part(p, n, undirected, payload, blocks.map { case (_, (in, edges)) => (in != flipped, edges) })))
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -160,32 +171,36 @@ private[graph] object ArrayGraph {
     * vertices with an out-edge into q in ascending order; local vertex
     * v's in-edges are the entries `inOff(v) until inOff(v + 1)`, entry e
     * coming from slot `inSlot(e)` of source partition `inFrom(e)`, sorted
-    * by (`inFrom`, `inSlot`).
+    * by (`inFrom`, `inSlot`). In a graph built with a payload of w
+    * doubles, in-edge e carries `inData(w * e until w * e + w)`; entries
+    * equal in (`inFrom`, `inSlot`) are ordered by their payload's bits.
     */
   final class Part(val index: Int, val ids: Array[Long], val outDegree: Array[Int],
       val out: Array[Array[Int]], val inOff: Array[Int], val inFrom: Array[Int],
-      val inSlot: Array[Int]) extends Serializable {
+      val inSlot: Array[Int], val inData: Array[Double]) extends Serializable {
 
     def size: Int = ids.length
 
     def inDegree(v: Int): Int = inOff(v + 1) - inOff(v)
 
-    /** (target partition, its slots' values) per target with a sender. */
-    def ship(values: Array[Long], sends: Int => Boolean): Iterator[(Int, Array[Long])] =
+    /** (target partition, its slots' `width` values each) per target with
+      * a sender.
+      */
+    def ship(values: Array[Long], sends: Int => Boolean, width: Int): Iterator[(Int, Array[Long])] =
       out.indices.iterator.filter(q => out(q).exists(sends)).map { q =>
-        val m = new Array[Long](out(q).length)
+        val (slots, m) = (out(q), new Array[Long](width * out(q).length))
         var k = 0
-        while (k < m.length) { m(k) = values(out(q)(k)); k += 1 }
+        while (k < slots.length) { System.arraycopy(values, width * slots(k), m, width * k, width); k += 1 }
         (q, m)
       }
   }
 
   /** What a partition received in one superstep: per source partition,
-    * its shipped slot values, or null.
+    * its shipped slot values, `width` per slot, or null.
     */
-  final class Inbox(p: Part, from: Array[Array[Long]]) {
-    /** The in-values of the vertex last gathered. */
-    val values = new Array[Long]((0 until p.size).foldLeft(0)((d, v) => math.max(d, p.inDegree(v))))
+  final class Inbox(p: Part, from: Array[Array[Long]], width: Int) {
+    /** The in-values of the vertex last gathered, `width` per in-value. */
+    val values = new Array[Long](width * (0 until p.size).foldLeft(0)((d, v) => math.max(d, p.inDegree(v))))
 
     /** Gathers local vertex v's in-values into [[values]], in (source
       * partition, slot) order; returns how many there are.
@@ -195,7 +210,7 @@ private[graph] object ArrayGraph {
       var e = p.inOff(v)
       while (e < p.inOff(v + 1)) {
         val m = from(p.inFrom(e))
-        if (m != null) { values(k) = m(p.inSlot(e)); k += 1 }
+        if (m != null) { System.arraycopy(m, width * p.inSlot(e), values, width * k, width); k += 1 }
         e += 1
       }
       k
@@ -206,37 +221,44 @@ private[graph] object ArrayGraph {
   def partOf(id: Long, n: Int): Int =
     Math.floorMod(java.lang.Long.hashCode(scala.util.hashing.byteswap64(id)), n)
 
-  /** Pairs per edge block of [[route]]. */
+  /** Edges per edge block of [[route]]. */
   private val Block = 4096
 
-  /** The edge rows of one input partition as blocks keyed by vertex
-    * partition: each edge goes to its source's partition as an out-edge
-    * (src, dst) and to its destination's as an in-edge (dst, src),
-    * interleaved into `Array[Long]`s of at most [[Block]] pairs, flagged
-    * `true` for in-edges. Rows with a null endpoint are skipped.
+  /** The edge rows of one input partition, (src, dst) and `w` payload
+    * doubles, as blocks keyed by vertex partition: each edge goes to its
+    * source's partition as an out-edge (src, dst, payload bits) and to
+    * its destination's as an in-edge (dst, src, payload bits),
+    * interleaved into `Array[Long]`s of at most [[Block]] edges, flagged
+    * `true` for in-edges. Rows with a null value are skipped.
     */
-  private def route(n: Int, rows: Iterator[InternalRow]): Iterator[(Int, (Boolean, Array[Long]))] = {
-    val bufs = Array.fill(2 * n)(new ArrayBuilder.ofLong) // 2p: out-edges of p, 2p + 1: in-edges
+  private def route(n: Int, w: Int, rows: Iterator[InternalRow]): Iterator[(Int, (Boolean, Array[Long]))] = {
+    val (bufs, stride) = (Array.fill(2 * n)(new ArrayBuilder.ofLong), 2 + w) // 2p: out-edges of p, 2p + 1: in-edges
     def take(b: Int) = { val a = bufs(b).result(); bufs(b).clear(); (b / 2, (b % 2 == 1, a)) }
-    rows.filter(r => !r.isNullAt(0) && !r.isNullAt(1)).flatMap { r =>
+    def complete(r: InternalRow) = !r.isNullAt(0) && !r.isNullAt(1) && (w == 0 || (2 until stride).forall(!r.isNullAt(_)))
+    rows.filter(complete).flatMap { r =>
       val (s, d) = (r.getLong(0), r.getLong(1))
       val (o, i) = (2 * partOf(s, n), 2 * partOf(d, n) + 1)
       bufs(o).addOne(s).addOne(d)
       bufs(i).addOne(d).addOne(s)
-      if (bufs(o).length < 2 * Block && bufs(i).length < 2 * Block) Iterator.empty
-      else Iterator(o, i).filter(bufs(_).length >= 2 * Block).map(take)
+      if (w > 0) for (j <- 2 until stride) {
+        val x = java.lang.Double.doubleToRawLongBits(r.getDouble(j))
+        bufs(o).addOne(x); bufs(i).addOne(x)
+      }
+      if (bufs(o).length < stride * Block && bufs(i).length < stride * Block) Iterator.empty
+      else Iterator(o, i).filter(bufs(_).length >= stride * Block).map(take)
     } ++ bufs.indices.iterator.filter(bufs(_).length > 0).map(take)
   }
 
   private object Part {
-    /** Partition `index`'s arrays from its [[route]] blocks. An undirected
-      * graph takes its out-edges and its in-edges alike from the distinct
-      * pairs of both.
+    /** Partition `index`'s arrays from its [[route]] blocks of edges with
+      * `w` payload values. An undirected graph, which has no payload,
+      * takes its out-edges and its in-edges alike from the distinct pairs
+      * of both.
       */
-    def apply(index: Int, n: Int, undirected: Boolean,
+    def apply(index: Int, n: Int, undirected: Boolean, w: Int,
               blocks: Iterator[(Boolean, Array[Long])]): Part = {
-      // (local end, remote end) of the out-edges and of the in-edges
-      val (oLoc, oRem, iLoc, iRem) = unzip(blocks)
+      // (local end, remote end) of the out-edges and of the in-edges, and the in-edges' payload bits
+      val (oLoc, oRem, iLoc, iRem, iPay) = unzip(blocks, w)
       val ids = sortedDistinct(Array.concat(oLoc, iLoc))
       val (outLoc, outRem, inLoc, inRem) =
         if (!undirected) (oLoc.map(local(ids, _)), oRem, iLoc.map(local(ids, _)), iRem)
@@ -263,25 +285,40 @@ private[graph] object ArrayGraph {
         new Array[Int](srcs.length))
       val slots = new Array[Int](n)
       for (k <- byPart.indices) { rank(byPart(k).toInt) = k; slot(k) = slots(from(k)); slots(from(k)) += 1 }
-      val csr = Array.tabulate(inLoc.length)(e => (inLoc(e).toLong << 32) | rank(local(srcs, inRem(e))))
-      Arrays.sort(csr)
+      val keys = Array.tabulate(inLoc.length)(e => (inLoc(e).toLong << 32) | rank(local(srcs, inRem(e))))
+      val (csr, inData) = if (w == 0) { Arrays.sort(keys); (keys, Array.emptyDoubleArray) } else {
+        // the payload follows its own edge: sort the edges, with equal keys in payload order
+        val order = Array.tabulate[Integer](keys.length)(Int.box)
+        Arrays.sort(order, (a: Integer, b: Integer) => java.lang.Long.compare(keys(a), keys(b)) match {
+          case 0 => Arrays.compare(iPay, w * a, w * a + w, iPay, w * b, w * b + w)
+          case c => c
+        })
+        (order.map(keys(_)),
+          Array.tabulate(w * order.length)(k => java.lang.Double.longBitsToDouble(iPay(w * order(k / w) + k % w))))
+      }
       val inOff = new Array[Int](ids.length + 1)
       csr.foreach(k => inOff((k >>> 32).toInt + 1) += 1)
       for (v <- ids.indices) inOff(v + 1) += inOff(v)
       new Part(index, ids, outDegree, out.map(_.result()), inOff,
-        csr.map(k => from(k.toInt)), csr.map(k => slot(k.toInt)))
+        csr.map(k => from(k.toInt)), csr.map(k => slot(k.toInt)), inData)
     }
 
-    /** (out-edge src, out-edge dst, in-edge dst, in-edge src) of the blocks. */
-    private def unzip(blocks: Iterator[(Boolean, Array[Long])]) = {
-      val (oSrc, oDst, iDst, iSrc) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong,
-        new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
-      blocks.foreach { case (in, pairs) =>
+    /** (out-edge src, out-edge dst, in-edge dst, in-edge src, in-edge
+      * payload bits) of the blocks of edges with `w` payload values.
+      */
+    private def unzip(blocks: Iterator[(Boolean, Array[Long])], w: Int) = {
+      val (oSrc, oDst, iDst, iSrc, iPay) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong,
+        new ArrayBuilder.ofLong, new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+      blocks.foreach { case (in, edges) =>
         val (a, b) = if (in) (iDst, iSrc) else (oSrc, oDst)
         var k = 0
-        while (k < pairs.length) { a.addOne(pairs(k)); b.addOne(pairs(k + 1)); k += 2 }
+        while (k < edges.length) {
+          a.addOne(edges(k)); b.addOne(edges(k + 1))
+          if (in && w > 0) iPay.addAll(edges, k + 2, w)
+          k += 2 + w
+        }
       }
-      (oSrc.result(), oDst.result(), iDst.result(), iSrc.result())
+      (oSrc.result(), oDst.result(), iDst.result(), iSrc.result(), iPay.result())
     }
 
     /** Sorts `xs` in place and returns its distinct values. */
