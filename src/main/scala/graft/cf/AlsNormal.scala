@@ -5,7 +5,7 @@ import java.util.BitSet
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,11 +19,12 @@ import graft.graph.ArrayGraph
   * variant (`wals.cpp`: per-rating confidence weights in both the
   * Gram matrix and the right-hand side).
   *
-  * Spark shape: the ratings are one [[graft.graph.ArrayGraph]] with
-  * edges user → item, each carrying its (rating, weight), laid out once
-  * per call. An item half-step is one superstep over it: each user ships
-  * its rank-wide factor once per partition pair that needs it (not once
-  * per rating), one shuffle, and one narrow fold in which each item
+  * Spark shape: the ratings are one [[Layout]], laid out once per call,
+  * which the ALS family shares: [[AlsCoord]] and [[Pmf]] run their
+  * supersteps on it from the same [[Factors]] state, start, RMSE log and
+  * factor frames. An item half-step is one superstep: each user ships its
+  * rank-wide factor once per partition pair that needs it (not once per
+  * rating), one shuffle, and one narrow fold in which each item
   * accumulates w·p pᵗ, w·r·p and n over its in-edges in (source
   * partition, slot) order and solves; the train RMSE sums fold into the
   * same pass. A user half-step is the same over the reversed view. All
@@ -32,7 +33,7 @@ import graft.graph.ArrayGraph
   * factors are bit-reproducible for a given partition count. Unlike
   * `ml.recommendation.ALS`, ratings carry arbitrary weights.
   */
-object AlsNormal {
+object AlsNormal extends Serializable {
 
   final case class Model(userFactors: DataFrame, itemFactors: DataFrame,
                          trainRmse: Seq[Double])
@@ -123,29 +124,33 @@ object AlsNormal {
     }
   }
 
-  private def dotArr(a: Column, b: Column): Column =
-    graft.functions.VecDot.of(a, b)
+  /** `ratings` as one [[graft.graph.ArrayGraph]] with edges user → item,
+    * each carrying its (rating, weight); no `weight` column → 1.0. Rows
+    * with a null are skipped, duplicates each count, and the `user` and
+    * `item` ids must be integral. `who` names the trainer in failures.
+    */
+  private[cf] final class Layout(ratings: DataFrame, val who: String) {
+    val (userType, itemType) = (idType(ratings, "user", who), idType(ratings, "item", who))
+    val g: ArrayGraph = ArrayGraph.directed(ratings.select(col("user").as("src"), col("item").as("dst"), col("rating"),
+      (if (ratings.columns.contains("weight")) col("weight") else lit(1.0d)).as("w")), col("rating"), col("w"))
+  }
 
   /** One partition's factors, `rank` doubles per local vertex: the user
     * factor of vertex v at `rank * v` of `p`, valid when `hasP(v)`, and
-    * its item factor likewise in `q`. `log` holds (Σ w·err², Σ w, rows)
-    * of the train RMSE of each iteration so far. A vertex is a user by
-    * its out-edges and an item by its in-edges, so a user and an item of
-    * one id share it.
+    * its item factor likewise in `q`. A vertex is a user by its out-edges
+    * and an item by its in-edges. `log` holds (Σ w·err², Σ w, rows) of
+    * each iteration's train RMSE, and `kept` a sampler's kept (p, q).
     */
-  private final class Factors(val p: Array[Double], val hasP: BitSet, val q: Array[Double],
-                              val hasQ: BitSet, val log: Array[Double]) extends Serializable
+  private[cf] final case class Factors(p: Array[Double], hasP: BitSet, q: Array[Double], hasQ: BitSet,
+                                       log: Array[Double], kept: List[(Array[Double], Array[Double])] = Nil)
 
-  /** Train (weighted) ALS. `ratings` needs integral `user` and `item`
-    * ids, a `rating` and optionally a `weight` (absent → 1.0, plain ALS);
-    * rows with a null in any of them are skipped, and duplicate (user,
-    * item) rows each count. λ follows the reference's per-vertex `λ·n`
-    * regularization (weighted-λ ALS), n counting the rows solved over.
-    * Each iteration solves every user from the item factors, then every
-    * item from the new user factors; its train RMSE is over the rows
-    * whose user and item both have a factor. The factor frames keep the
-    * `user` and `item` id types; with no iteration the user frame is
-    * empty and the item frame holds the start.
+  /** Train (weighted) ALS on the ratings [[Layout]]. λ follows the
+    * reference's per-vertex `λ·n` regularization (weighted-λ ALS), n
+    * counting the rows solved over. Each iteration solves every user from
+    * the item factors, then every item from the new user factors; its
+    * train RMSE is over the rows whose user and item both have a factor.
+    * With no iteration the user frame is empty and the item frame holds
+    * the start.
     *
     * @param warmStartItemFactors optional (id, f) item factors to resume
     *   from — the reference's `load_factors_from_file` warm start
@@ -157,79 +162,93 @@ object AlsNormal {
             lambda: Double = 0.065, seed: Long = 42L,
             warmStartItemFactors: Option[DataFrame] = None,
             sparsity: Option[Int] = None): Model = {
-    val (userType, itemType) = (idType(ratings, "user"), idType(ratings, "item"))
-    val w = if (ratings.columns.contains("weight")) col("weight") else lit(1.0d)
-    val g = ArrayGraph.directed(
-      ratings.select(col("user").as("src"), col("item").as("dst"), col("rating"), w.as("w")), col("rating"), col("w"))
-    var state = start(g, rank, seed, itemType != LongType, warmStartItemFactors)
-    val solve = (a: Array[Array[Double]]) => sparsity.foldLeft(eliminate(a, rank))(hardThreshold)
-    for (_ <- 1 to iterations)
-      state = halfStep(g, halfStep(g.reversed, state, rank, lambda, solve, items = false),
-        rank, lambda, solve, items = true)
-    state.persist(StorageLevel.MEMORY_AND_DISK) // the RMSE job computes it; the factor frames read it
-    val rmse = if (iterations == 0) Nil else {
-      val logs = g.each(state)(_.log)
-      (0 until iterations).map { i =>
-        val Seq(se, sw, n) = (0 until 3).map(j => logs.map(_(3 * i + j)).sum)
-        require(n > 0, "AlsNormal.train: no rating row has a non-null user, item, rating and weight" +
-          (if (warmStartItemFactors.isEmpty) "" else " and an item with a warm-start factor"))
-        math.sqrt(se / sw)
-      }
-    }
-    if (iterations > 0) g.reversed.parts.unpersist(blocking = false) // the frames read `g.parts` and `state` only
-    def frame(t: DataType, f: Factors => (Array[Double], BitSet)) =
-      g.column(state, "f", ArrayType(DoubleType, containsNull = false)) { s =>
-        val (x, has) = f(s)
-        Array.tabulate(x.length / rank)(v =>
-          if (has.get(v)) UnsafeArrayData.fromPrimitiveArray(x.slice(rank * v, rank * v + rank)) else null)
-      }.select(col("id").cast(t).as("id"), col("f"))
-    Model(frame(userType, s => (s.p, s.hasP)), frame(itemType, s => (s.q, s.hasQ)), rmse)
+    val l = new Layout(ratings, "AlsNormal.train")
+    var state = start(l, rank, seed, warm = warmStartItemFactors)
+    for (_ <- 1 to iterations) state = iteration(l, state, rank, lambda, sparsity)
+    model(l, state, iterations, rank)
   }
 
-  /** The type of `ratings`' id column `name`, which must be integral. */
-  private def idType(ratings: DataFrame, name: String): DataType = ratings.schema(name).dataType match {
+  /** The type of `df`'s id column `name`, which must be integral. */
+  private def idType(df: DataFrame, name: String, who: String): DataType = df.schema(name).dataType match {
     case t @ (ByteType | ShortType | IntegerType | LongType) => t
-    case t => throw new IllegalArgumentException(
-      s"AlsNormal.train: `$name` must be an integral id, not ${t.simpleString}")
+    case t => throw new IllegalArgumentException(s"$who: `$name` must be an integral id, not ${t.simpleString}")
   }
+
+  /** Spark's `xxhash64` of `id` alone, for an id column of type `t`. */
+  private[cf] def idHash(id: Long, t: DataType): Long =
+    if (t == LongType) XXH64.hashLong(id, 42L) else XXH64.hashInt(id.toInt, 42L) // 42: xxhash64's own seed
 
   /** The state before the first iteration: each item's warm-start factor,
     * or else `pmod(xxhash64(id, k, seed), 1000) / 1000` for k in
-    * 0 until rank, hashed as Spark's `xxhash64` hashes an id of the
-    * item column's type (`intIds`: byte, short or int).
+    * 0 until rank, hashed as Spark's `xxhash64` hashes an id of the item
+    * column's type; with `userSeed`, each user's factor likewise.
     */
-  private def start(g: ArrayGraph, rank: Int, seed: Long, intIds: Boolean,
-                    warm: Option[DataFrame]): RDD[Factors] = {
-    val n = g.parts.getNumPartitions
-    // (id, f) in the partition of its vertex: seeded per vertex of `g.parts`, or a warm start routed there
-    val items = warm match {
-      case None => g.parts.flatMap(part => (0 until part.size).iterator.filter(part.inDegree(_) > 0).map { v =>
-        val id = part.ids(v)
-        val h = if (intIds) XXH64.hashInt(id.toInt, 42L) else XXH64.hashLong(id, 42L) // 42: xxhash64's own seed
-        (id, Array.tabulate(rank)(k => Math.floorMod(XXH64.hashLong(seed, XXH64.hashInt(k, h)), 1000L).toDouble / 1000.0))
-      })
+  private[cf] def start(l: Layout, rank: Int, seed: Long, userSeed: Option[Long] = None,
+                        warm: Option[DataFrame] = None): RDD[Factors] = {
+    val (n, userType, itemType, who, hashItems) = (l.g.parts.getNumPartitions, l.userType, l.itemType, l.who, warm.isEmpty)
+    def hashed(h: Long, seed: Long) = // h: the id's `idHash`
+      Array.tabulate(rank)(k => Math.floorMod(XXH64.hashLong(seed, XXH64.hashInt(k, h)), 1000L) / 1000.0)
+    def fill(part: ArrayGraph.Part, rows: Iterator[(Long, Array[Double])]): Factors = {
+      val s = Factors(new Array[Double](rank * part.size), new BitSet(part.size),
+        new Array[Double](rank * part.size), new BitSet(part.size), Array.emptyDoubleArray)
+      def set(x: Array[Double], has: BitSet, v: Int, f: Array[Double]) = { System.arraycopy(f, 0, x, rank * v, rank); has.set(v) }
+      for (v <- 0 until part.size) {
+        for (seed <- userSeed if part.outDegree(v) > 0) set(s.p, s.hasP, v, hashed(idHash(part.ids(v), userType), seed))
+        if (hashItems && part.inDegree(v) > 0) set(s.q, s.hasQ, v, hashed(idHash(part.ids(v), itemType), seed))
+      }
+      rows.foreach { case (id, f) =>
+        require(f.length == rank, s"$who: warm-start factor of item $id has ${f.length} values, not $rank")
+        val v = java.util.Arrays.binarySearch(part.ids, id)
+        if (v >= 0 && part.inDegree(v) > 0) {
+          require(!s.hasQ.get(v), s"$who: item $id has two warm-start factors")
+          set(s.q, s.hasQ, v, f)
+        }
+      }
+      s
+    }
+    warm match {
+      case None => l.g.parts.map(fill(_, Iterator.empty))
       case Some(df) =>
-        idType(df, "id") // fails on a non-integral id, which the cast below would make null
-        df.select(col("id").cast(LongType), col("f")).queryExecution.toRdd
+        idType(df, "id", who) // fails on a non-integral id, which the cast below would make null
+        // (id, f) in the partition of its vertex
+        val rows = df.select(col("id").cast(LongType), col("f")).queryExecution.toRdd
           .flatMap(r => if (r.isNullAt(0) || r.isNullAt(1)) None
             else Some((ArrayGraph.partOf(r.getLong(0), n), (r.getLong(0), r.getArray(1).toDoubleArray()))))
           .partitionBy(new HashPartitioner(n)).values
+        l.g.parts.zipPartitions(rows)((ps, rs) => Iterator(fill(ps.next(), rs)))
     }
-    g.parts.zipPartitions(items) { (parts, rows) =>
-      val part = parts.next()
-      val s = new Factors(new Array[Double](rank * part.size), new BitSet(part.size),
-        new Array[Double](rank * part.size), new BitSet(part.size), Array.emptyDoubleArray)
-      rows.foreach { case (id, f) =>
-        require(f.length == rank, s"AlsNormal.train: warm-start factor of item $id has ${f.length} values, not $rank")
-        val v = java.util.Arrays.binarySearch(part.ids, id)
-        if (v >= 0 && part.inDegree(v) > 0) {
-          require(!s.hasQ.get(v), s"AlsNormal.train: item $id has two warm-start factors")
-          System.arraycopy(f, 0, s.q, rank * v, rank)
-          s.hasQ.set(v)
-        }
+  }
+
+  /** One ALS iteration: a user half-step over the reversed graph, then an
+    * item half-step, which logs the iteration's RMSE sums.
+    */
+  private[cf] def iteration(l: Layout, state: RDD[Factors], rank: Int, lambda: Double,
+                            sparsity: Option[Int] = None): RDD[Factors] =
+    halfStep(l.g, halfStep(l.g.reversed, state, rank, lambda, sparsity, items = false),
+      rank, lambda, sparsity, items = true)
+
+  /** The model of `state` after `iterations`: their train RMSE in one
+    * job, and the factor frames, `width` values per vertex, with the
+    * ratings' id types. `state` is persisted, as that job computes it and
+    * the frames read it; the reversed layout, unread, is dropped.
+    */
+  private[cf] def model(l: Layout, state: RDD[Factors], iterations: Int, width: Int): Model = {
+    state.persist(StorageLevel.MEMORY_AND_DISK)
+    val trace = if (iterations == 0) Nil else {
+      val logs = l.g.each(state)(_.log)
+      l.g.reversed.parts.unpersist(blocking = false)
+      (0 until iterations).map { i =>
+        val Seq(se, sw, n) = (0 until 3).map(j => logs.map(_(3 * i + j)).sum)
+        require(n > 0, s"${l.who}: no rating row has a non-null user, item, rating and weight and a factor at both ends")
+        math.sqrt(se / sw)
       }
-      Iterator(s)
     }
+    def frame(users: Boolean) = l.g.column(state, "f", ArrayType(DoubleType, containsNull = false)) { s =>
+      val (x, has) = if (users) (s.p, s.hasP) else (s.q, s.hasQ)
+      Array.tabulate(x.length / width)(v =>
+        if (has.get(v)) UnsafeArrayData.fromPrimitiveArray(x.slice(width * v, width * v + width)) else null)
+    }.select(col("id").cast(if (users) l.userType else l.itemType).as("id"), col("f"))
+    Model(frame(users = true), frame(users = false), trace)
   }
 
   /** One half-step over `g`: each vertex with a factor on the sending
@@ -238,7 +257,7 @@ object AlsNormal {
     * item half-step also appends its iteration's RMSE sums to the log.
     */
   private def halfStep(g: ArrayGraph, state: RDD[Factors], rank: Int, lambda: Double,
-                       solve: Array[Array[Double]] => Array[Double], items: Boolean): RDD[Factors] =
+                       sparsity: Option[Int], items: Boolean): RDD[Factors] =
     // per slot: the factor's bits and then 1 if it is valid, 0 if not
     g.superstep(state, rank + 1) { (part, s) =>
       val (x, has) = if (items) (s.p, s.hasP) else (s.q, s.hasQ)
@@ -274,7 +293,7 @@ object AlsNormal {
         }
         if (n > 0) {
           for (i <- 0 until rank) a(i)(i) += lambda * n
-          System.arraycopy(solve(a), 0, y, rank * v, rank)
+          System.arraycopy(sparsity.foldLeft(eliminate(a, rank))(hardThreshold), 0, y, rank * v, rank)
           has.set(v)
           if (items) for (j <- 0 until k if valid(j)) {
             val (r, w) = (part.inData(2 * (e + j)), part.inData(2 * (e + j) + 1))
@@ -284,8 +303,7 @@ object AlsNormal {
           }
         }
       }
-      if (items) new Factors(s.p, s.hasP, y, has, s.log ++ sums)
-      else new Factors(y, has, s.q, s.hasQ, s.log)
+      if (items) s.copy(q = y, hasQ = has, log = s.log ++ sums) else s.copy(p = y, hasP = has)
     }
 
   /** Predict for (user, item) pairs. */
@@ -293,6 +311,6 @@ object AlsNormal {
     pairs
       .join(model.userFactors.select(col("id").as("user"), col("f").as("p")), "user")
       .join(model.itemFactors.select(col("id").as("item"), col("f").as("q")), "item")
-      .withColumn("pred", dotArr(col("p"), col("q")))
+      .withColumn("pred", graft.functions.VecDot.of(col("p"), col("q")))
       .drop("p", "q")
 }

@@ -1,6 +1,6 @@
 package graft.cf
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -84,6 +84,74 @@ class AlsNormalSpec extends SparkSpec {
     (p, q, trace)
   }
 
+  /** CCD++ over plain collections: users start from [[hashInit]] with
+    * `seed` and items with `seed + 1`; per coordinate d, every user and
+    * then every item takes x_d ← Σ (e + p_d q_d) y_d / (λ + Σ y_d²) over
+    * its ratings, y being the other end's factor and e = r − p·q. The
+    * trace is each iteration's unweighted RMSE. Weights are ignored, and
+    * rows with a null user, item or rating are skipped.
+    */
+  private def plainCcd(rows: Seq[(Any, Any, Any, Any)], rank: Int, iterations: Int, lambda: Double,
+                       seed: Long): (Factors, Factors, Seq[Double]) = {
+    type Row3 = (Long, Long, Double)
+    val valid = rows.collect { case (u: Long, i: Long, r: Double, _) => (u, i, r) }
+    def init(ids: Seq[Long], seed: Long) = factors(hashInit(ids.distinct.toDF("id"), rank, seed))
+    val (p, q) = (init(valid.map(_._1), seed), init(valid.map(_._2), seed + 1))
+    def err(t: Row3) = t._3 - dot(p(t._1), q(t._2))
+    def update(x: Factors, y: Factors, mine: Row3 => Long, theirs: Row3 => Long, d: Int): Unit =
+      valid.groupBy(mine).foreach { case (v, rs) =>
+        var (num, den) = (0.0, 0.0)
+        for (t <- rs) {
+          val (a, b) = (x(v)(d), y(theirs(t))(d))
+          num += (err(t) + a * b) * b
+          den += b * b
+        }
+        x(v)(d) = num / (lambda + den)
+      }
+    val trace = (1 to iterations).map { _ =>
+      for (d <- 0 until rank) { update(p, q, _._1, _._2, d); update(q, p, _._2, _._1, d) }
+      math.sqrt(valid.map(t => err(t) * err(t)).sum / valid.size)
+    }
+    (p, q, trace)
+  }
+
+  private def dot(a: Array[Double], b: Array[Double]): Double = a.indices.foldLeft(0.0)((s, k) => s + a(k) * b(k))
+
+  /** PMF's N(0, 1) draws as a frame: per id and dimension k, Box–Muller
+    * over the uniforms `(pmod(xxhash64(id, k, sweep, s), 10⁶) + 1) / (10⁶ + 1)`
+    * for s = `seed` and `seed + 77`.
+    */
+  private def gaussianInit(ids: DataFrame, rank: Int, sweep: Int, seed: Long): DataFrame = {
+    def u(k: Column, s: Long) =
+      (pmod(xxhash64(col("id"), k, lit(sweep), lit(s)), lit(1000000L)).cast("double") + 1.0) / 1000001.0
+    ids.select(col("id"), transform(sequence(lit(0), lit(rank - 1)),
+      k => sqrt(lit(-2.0) * log(u(k, seed))) * cos(lit(2.0 * math.Pi) * u(k, seed + 77))).as("f"))
+  }
+
+  /** PMF over plain collections: one unweighted [[plainAls]] iteration
+    * from the hash-seeded start, then per sweep the item factors plus
+    * `noiseScale` times [[gaussianInit]]'s draws and one more iteration.
+    * The trace is each sweep's train RMSE; the mean prediction of each
+    * distinct (user, item) pair is p·q averaged over the last `samples`
+    * sweeps.
+    */
+  private def plainPmf(rows: Seq[(Any, Any, Any, Any)], rank: Int, burnIn: Int, samples: Int, lambda: Double,
+                       noiseScale: Double, seed: Long): (Map[(Long, Long), Double], Seq[Double]) = {
+    val plain = rows.collect { case (u: Long, i: Long, r: Double, _) => (u, i, r, 1.0) }
+    val items = plain.map(_._2).distinct.toDF("id")
+    var (p, q, _) = plainAls(plain, rank, 1, lambda, factors(hashInit(items, rank, seed)), None)
+    val sums = scala.collection.mutable.Map.empty[(Long, Long), Double].withDefaultValue(0.0)
+    val trace = (1 to burnIn + samples).map { sweep =>
+      val noise = factors(gaussianInit(items, rank, sweep, seed))
+      val noisy = q.map { case (i, f) => i -> f.indices.map(k => f(k) + noise(i)(k) * noiseScale).toArray }
+      val (p2, q2, t) = plainAls(plain, rank, 1, lambda, noisy, None)
+      p = p2; q = q2
+      if (sweep > burnIn) for ((u, i) <- plain.map(t => (t._1, t._2)).distinct) sums((u, i)) += dot(p(u), q(i))
+      t.last
+    }
+    (sums.map { case (k, s) => k -> s / samples }.toMap, trace)
+  }
+
   private def close(got: Double, want: Double, what: => String): Unit =
     assert(math.abs(got - want) <= 1e-9 * math.max(1.0, math.abs(want)), s"$what: $got vs $want")
 
@@ -99,6 +167,30 @@ class AlsNormalSpec extends SparkSpec {
     assert(got._3.length == want._3.length, s"$what: trace ${got._3} vs ${want._3}")
     got._3.zip(want._3).foreach { case (a, b) => close(a, b, s"$what: train RMSE") }
   }
+
+  private def coord(df: DataFrame, rank: Int, iterations: Int, seed: Long = 42L): (Factors, Factors, Seq[Double]) = {
+    val m = AlsCoord.train(df, rank, iterations, seed = seed)
+    (factors(m.userFactors), factors(m.itemFactors), m.trainRmse)
+  }
+
+  /** Pmf's mean prediction per (user, item), failing on a repeated pair, and its trace. */
+  private def pmf(m: Pmf.Model): (Map[(Long, Long), Double], Seq[Double]) = {
+    val rows = m.meanPrediction.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    assert(rows.map(_._1).distinct.length == rows.length, "a (user, item) pair has two mean predictions")
+    (rows.toMap, m.trainRmse)
+  }
+
+  private def assertPmf(got: (Map[(Long, Long), Double], Seq[Double]), want: (Map[(Long, Long), Double], Seq[Double]),
+                        what: String): Unit = {
+    assert(got._1.keySet == want._1.keySet, s"$what: pairs ${got._1.keySet.diff(want._1.keySet)} vs " +
+      s"${want._1.keySet.diff(got._1.keySet)}")
+    for ((k, x) <- want._1) close(got._1(k), x, s"$what: mean prediction of $k")
+    assert(got._2.length == want._2.length, s"$what: trace ${got._2} vs ${want._2}")
+    got._2.zip(want._2).foreach { case (a, b) => close(a, b, s"$what: train RMSE") }
+  }
+
+  private def pmfBits(r: (Map[(Long, Long), Double], Seq[Double])) =
+    (r._1.map { case (k, x) => k -> java.lang.Double.doubleToRawLongBits(x) }, r._2.map(java.lang.Double.doubleToRawLongBits))
 
   private def bits(r: (Factors, Factors, Seq[Double])) =
     (Seq(r._1, r._2).map(_.map { case (v, x) => v -> x.toSeq.map(java.lang.Double.doubleToRawLongBits) }),
@@ -179,9 +271,88 @@ class AlsNormalSpec extends SparkSpec {
   test("ALS model frames recompute to the same bits after every cached RDD is dropped") {
     val m = AlsNormal.train(frame(ratings(7)), rank = 4, iterations = 2,
       warmStartItemFactors = Some(Seq((0L, Seq(0.1, 0.2, 0.3, 0.4))).toDF("id", "f")))
-    val first = result(m)
-    assert(first._1.nonEmpty && first._2.nonEmpty)
+    val c = AlsCoord.train(frame(ratings(7)), rank = 3, iterations = 2)
+    val p = Pmf.train(frame(ratings(7)), rank = 3, burnIn = 1, samples = 2)
+    def all = (result(m), (factors(c.userFactors), factors(c.itemFactors), c.trainRmse), pmf(p))
+    val first = all
+    assert(first._1._1.nonEmpty && first._1._2.nonEmpty && first._2._1.nonEmpty && first._3._1.nonEmpty)
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    assert(bits(result(m)) == bits(first))
+    val again = all
+    assert(bits(again._1) == bits(first._1))
+    assert(bits(again._2) == bits(first._2))
+    assert(pmfBits(again._3) == pmfBits(first._3))
+  }
+
+  test("AlsCoord matches a plain single-thread CCD++: one-rating users and items, duplicates, shared and extreme ids") {
+    val rows = ratings(11)
+    for ((rank, iters, seed) <- Seq((4, 3, 42L), (2, 2, 5L)))
+      assertModel(coord(frame(rows, weighted = false), rank, iters, seed), plainCcd(rows, rank, iters, 0.065, seed),
+        s"rank $rank, $iters iterations, seed $seed")
+    // with no iteration, users start from the hash with `seed` and items with `seed + 1`, for int ids too
+    val small = rows.filter(r => r._1.asInstanceOf[Long].isValidInt && r._2.asInstanceOf[Long].isValidInt)
+    val ints = frame(small, weighted = false)
+      .select(col("user").cast("int").as("user"), col("item").cast("int").as("item"), col("rating"))
+    val m = AlsCoord.train(ints, rank = 3, iterations = 0, seed = 17L)
+    def bitsOf(d: DataFrame) = d.collect().map(r => r.get(0) -> r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits)).toMap
+    assert(m.userFactors.schema("id").dataType == IntegerType && m.trainRmse.isEmpty)
+    assert(bitsOf(m.userFactors) == bitsOf(hashInit(ints.select(col("user").as("id")).distinct(), 3, 17L)))
+    assert(bitsOf(m.itemFactors) == bitsOf(hashInit(ints.select(col("item").as("id")).distinct(), 3, 18L)))
+  }
+
+  test("AlsCoord skips rows with a null user, item or rating, and ignores weights") {
+    val rows = ratings(12).filter(_._4 != null)
+    val clean = coord(frame(rows, weighted = false), rank = 3, iterations = 2)
+    // user 77's only row has a null rating
+    val nulls = Seq((null, 1L, 3.0, 1.0), (2L, null, 3.0, 1.0), (2L, 1L, null, 1.0), (77L, 1L, null, 1.0))
+    val skipped = coord(frame(rows ++ nulls, weighted = false), rank = 3, iterations = 2)
+    assert(!skipped._1.contains(77L))
+    assert(bits(skipped) == bits(clean))
+    assert(bits(coord(frame(rows.map { case (u, i, r, w) => (u, i, r, w.asInstanceOf[Double] * 3) }), 3, 2)) == bits(clean))
+  }
+
+  test("Pmf matches a plain single-thread PMF: one-rating users and items, duplicates, shared and extreme ids") {
+    val rows = ratings(13)
+    for ((rank, burnIn, samples, weighted) <- Seq((4, 1, 2, false), (3, 0, 1, true), (2, 2, 3, false)))
+      assertPmf(pmf(Pmf.train(frame(rows, weighted), rank, burnIn, samples, noiseScale = 0.05)),
+        plainPmf(rows, rank, burnIn, samples, 0.065, 0.05, 42L), s"rank $rank, burn-in $burnIn, $samples samples")
+  }
+
+  test("Pmf's mean prediction is one row per distinct pair and does not grow with a pair's repeats") {
+    // every row twice doubles each vertex's Gram matrix, right-hand side and
+    // λ·n alike, so the factors, and with them the means, stay as they were
+    val rows = ratings(14).filter(_._4 != null)
+    val once = pmf(Pmf.train(frame(rows), rank = 3, burnIn = 1, samples = 2))
+    assertPmf(pmf(Pmf.train(frame(rows ++ rows), rank = 3, burnIn = 1, samples = 2)), once, "every row twice")
+  }
+
+  test("AlsCoord and Pmf results do not depend on shuffle partitions and are bit-identical across runs") {
+    val df = frame(ratings(15))
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def run(parts: Int) = {
+      spark.conf.set(key, parts.toString)
+      try (coord(df, rank = 3, iterations = 2), pmf(Pmf.train(df, rank = 3, burnIn = 1, samples = 2)))
+      finally spark.conf.set(key, saved)
+    }
+    val base = run(1)
+    for (parts <- Seq(1, 7, 200)) {
+      val (c, p) = run(parts)
+      val again = run(parts)
+      assert(bits(again._1) == bits(c) && pmfBits(again._2) == pmfBits(p), s"two runs differ at $parts partitions")
+      assertModel(c, base._1, s"AlsCoord at $parts partitions")
+      assertPmf(p, base._2, s"Pmf at $parts partitions")
+    }
+  }
+
+  test("AlsCoord and Pmf leave cached only the layout and the state that their frames read") {
+    val sc = spark.sparkContext
+    for ((name, run) <- Seq[(String, () => DataFrame)](
+        "AlsCoord" -> (() => AlsCoord.train(frame(ratings(16)), rank = 3, iterations = 2).itemFactors),
+        "Pmf" -> (() => Pmf.train(frame(ratings(16)), rank = 3, burnIn = 1, samples = 2).meanPrediction))) {
+      val before = sc.getPersistentRDDs.keySet
+      run().collect()
+      val added = sc.getPersistentRDDs.keySet -- before
+      assert(added.size == 2, s"$name left ${added.size} RDDs cached: ${added.map(sc.getPersistentRDDs(_))}")
+    }
   }
 }
